@@ -5,11 +5,12 @@ The inputs are generated by the benchmark itself rather than by
 ``towhee_spark.synth`` so that a change to the library's own fixture code
 cannot shift what the benchmark measures.
 
-Row counts do not depend on the seed: every size-determining draw (turns
-per conversation, context rows per conversation, near-duplicate cluster
-sizes, short documents) comes from a fixed multiset that the seed only
-permutes. Runs on different seeds therefore do the same amount of work on
-different content, and ``expected_rows`` can be checked exactly.
+Row counts do not depend on the seed: turns and context rows per
+conversation, near-duplicate cluster sizes and the short-document share
+come from fixed multisets that the seed only permutes, so recorded row
+counts can be checked exactly. Gaps between turns and tokens per turn are
+fixed multisets too, so runs on different seeds do close to the same
+transcript work on different content.
 """
 
 from __future__ import annotations
