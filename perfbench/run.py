@@ -35,19 +35,18 @@ from pyspark.sql import functions as F
 
 import probes
 from spans import Tracer
-from workloads import WORKLOADS
+from workloads import WARMUP_PASSES, WORKLOADS
 
 HERE = Path(__file__).resolve().parent
 ROOT = HERE.parent
 DEFAULT_SEED = 0
-# The JVM heap is fixed and touched up front (-Xms = -Xmx, AlwaysPreTouch)
-# so that peak_rss_mb does not depend on when G1 chose to grow the heap;
-# heap pressure shows as spark.gc_s instead.
+# An explicit heap that fits a small host (the library default is 48g). Its
+# size is fixed (-Xms = -Xmx) so that GC sizing does not differ from run to
+# run, but its pages are not touched up front: peak_rss_mb counts the heap
+# the workload actually uses.
 DRIVER_MEMORY = "1g"
-SETUP_BUILDS = 3   # input builds per run; setup_s takes their median
-WARMUP_PASSES = 2  # the first is cold; timing starts after the second
-MIN_PASSES = 5     # timed passes even when they outlast --seconds
-TRACED_PASSES = 3
+MIN_PASSES = 2     # timed passes even when they outlast --seconds
+TRACED_PASSES = 1
 
 END_TO_END_UNITS = {"setup_s": "s", "run_s": "s", "rows_per_s": "rows/s",
                     "cpu_s": "s", "peak_rss_mb": "MB"}
@@ -96,8 +95,8 @@ def start_session(workdir: Path, cores: int):
     return get_spark("perfbench", master=f"local[{cores}]", shuffle_partitions=cores, extra_conf={
         "spark.driver.memory": DRIVER_MEMORY,
         "spark.local.dir": str(local),
-        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData "
-                                         f"-Xms{DRIVER_MEMORY} -XX:+AlwaysPreTouch",
+        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData -Xms{DRIVER_MEMORY}",
+        "spark.ui.showConsoleProgress": "false",
     })
 
 
@@ -122,15 +121,20 @@ def stop_session(spark) -> None:
 
 
 class Tally:
-    """Passes attempted and failed, with the reason for each failure."""
+    """Passes attempted and failed, and checks outside the passes (inputs,
+    oracles) that failed, with the reason for each. ``error_rate`` counts
+    passes only; any failure makes the run incorrect."""
 
     def __init__(self):
-        self.attempted = self.failed = 0
+        self.attempted = self.failed = self.checks_failed = 0
         self.problems: list[str] = []
+
+    @property
+    def correct(self) -> bool:
+        return self.failed == 0 and self.checks_failed == 0
 
     def run(self, wl, i: int):
         """One checked pass; returns (result or None, wall s, tree CPU s)."""
-    
         self.attempted += 1
         c0, t0 = probes.tree_cpu_s(), time.perf_counter()
         try:
@@ -147,7 +151,17 @@ class Tally:
         return res, wall, cpu
 
     def fail(self, why: str) -> None:
+        """A failed pass."""
         self.failed += 1
+        self._note(why)
+
+    def problem(self, why: str) -> None:
+        """A failed check that is not a pass: input rows or checksums, or
+        an oracle run once per workload."""
+        self.checks_failed += 1
+        self._note(why)
+
+    def _note(self, why: str) -> None:
         self.problems.append(why)
         print(f"# FAIL {why}", file=sys.stderr)
 
@@ -157,37 +171,29 @@ def load_reference() -> dict:
         return json.load(f)
 
 
-def setup(wl, ref: dict, seed: int, tally: Tally, tracer, n_builds: int) -> dict:
-    """Build the inputs ``n_builds`` times (keeping the last), check them,
-    and run the warm-up pass. Returns the setup timings."""
-    builds = []
-    for b in range(n_builds):
-        with tracer.span("layout.load", build=b):
-            builds.append(wl.load())
-    last = builds[-1]["inputs"]
+def setup(wl, ref: dict, seed: int, tally: Tally, tracer) -> dict:
+    """Build and check the inputs, then run the warm-up pass (code
+    generation, Python-worker start, most JIT). Returns the setup timings."""
+    with tracer.span("layout.load"):
+        build = wl.load()
+    inputs = build.pop("inputs")
     want = ref["input_rows"]
-    got = {k: v["rows"] for k, v in last.items()}
+    got = {k: v["rows"] for k, v in inputs.items()}
     if got != want:
-        tally.fail(f"input rows {got} != recorded {want}")
+        tally.problem(f"input rows {got} != recorded {want}")
+    sums = {k: v["checksum"] for k, v in inputs.items()}
     if seed == DEFAULT_SEED:
-        sums = {k: v["checksum"] for k, v in last.items()}
         if sums != ref["default_seed"]["inputs"]:
-            tally.fail(f"input checksums {sums} != recorded {ref['default_seed']['inputs']}")
+            tally.problem(f"input checksums {sums} != recorded {ref['default_seed']['inputs']}")
         wl.expected = ref["default_seed"]["output"]
     warmups = []
     for i in range(WARMUP_PASSES):
         with tracer.span("session.warmup", index=i):
             res, wall, _ = tally.run(wl, i)
         warmups.append(wall)
-    return {
-        "build_s": statistics.median(b["generate_s"] + b["cache_s"] for b in builds),
-        "cache_s": statistics.median(b["cache_s"] for b in builds),
-        "warmup_s": warmups[0],
-        "warmup_walls": warmups,
-        "builds": [{k: v for k, v in b.items() if k != "inputs"} for b in builds],
-        "input_checksums": {k: v["checksum"] for k, v in last.items()},
-        "output": res and {k: res[k] for k in ("rows", "checksum")},
-    }
+    return {**build, "warmup_s": warmups[0], "warmup_walls": warmups,
+            "input_checksums": sums,
+            "output": res and {k: res[k] for k in wl.EXPECT}}
 
 
 def timed_passes(wl, tally: Tally, seconds: float, first: int) -> dict:
@@ -207,9 +213,9 @@ def timed_passes(wl, tally: Tally, seconds: float, first: int) -> dict:
 
 
 def traced_passes(wl, tally: Tally, tracer, first: int) -> tuple[list[float], list[float], dict]:
-    """TRACED_PASSES pairs of passes, each an untraced pass followed by one
-    with Spark job groups, spans and counter reads, so that both sides see
-    the same warm-up. Returns (untraced walls, traced walls, median of each
+    """TRACED_PASSES passes with Spark job groups, spans and counter reads,
+    each between two untraced passes, so that both sides see the same
+    warm-up trend. Returns (untraced walls, traced walls, median of each
     Spark counter over the traced passes)."""
     sc = wl.spark.sparkContext
     plain, walls, counters = [], [], []
@@ -223,11 +229,13 @@ def traced_passes(wl, tally: Tally, tracer, first: int) -> tuple[list[float], li
             c["gc_s"] = probes.jvm_gc_s(sc) - gc0
             sp["spark"] = c
         counters.append(c)
+    plain.append(tally.run(wl, first + 2 * TRACED_PASSES)[1])
     med = {f"spark.{k}": statistics.median(c[k] for c in counters) for k in counters[0]}
     return plain, walls, med
 
 
 def host_info(cores: int, spark, seed: int) -> dict:
+    """Versions and session settings, recorded as diagnostics only."""
     jvm = spark.sparkContext._jvm  # noqa: SLF001
     return {
         "cores": cores, "seed": seed,
@@ -236,7 +244,6 @@ def host_info(cores: int, spark, seed: int) -> dict:
         "spark": pyspark.__version__, "python": platform.python_version(),
         "pyarrow": pyarrow.__version__, "numpy": numpy.__version__,
         "jdk": jvm.java.lang.System.getProperty("java.version"),
-        "host_canary_s": probes.host_canary_s(),
     }
 
 
@@ -248,10 +255,10 @@ def run_workload(spark, name: str, args, session_s: float, workdir: Path,
     tally = Tally()
     wl = WORKLOADS[name](spark, args.seed, str(workdir))
     wl.tracer = tracer
-    # the traced run reports no setup_s: one build leaves its time to the
-    # traced passes and the decomposition
-    su = setup(wl, load_reference()[name], args.seed, tally, tracer,
-               1 if args.trace else SETUP_BUILDS)
+    su = setup(wl, load_reference()[name], args.seed, tally, tracer)
+    # process start (imports included) until timing begins; in a process
+    # that runs several workloads this includes the earlier ones
+    setup_s = process_age_s()
     diag = {"workload": name, "input_rows": wl.input_rows, "session_s": session_s, **su}
     if args.trace:
         metrics, diag["layers"] = trace_workload(wl, tally, tracer, session_s, su)
@@ -259,7 +266,7 @@ def run_workload(spark, name: str, args, session_s: float, workdir: Path,
         tp = timed_passes(wl, tally, args.seconds, first=WARMUP_PASSES)
         run_s = statistics.median(tp["walls"])
         metrics = {
-            "setup_s": session_s + su["build_s"] + sum(su["warmup_walls"]),
+            "setup_s": setup_s,
             "run_s": run_s,
             "rows_per_s": wl.input_rows / run_s,
             "cpu_s": statistics.median(tp["cpus"]),
@@ -267,8 +274,11 @@ def run_workload(spark, name: str, args, session_s: float, workdir: Path,
         diag.update({"pass_walls": tp["walls"], "pass_cpus": tp["cpus"], **tp["host"]})
     with tracer.span("verify"):
         for p in wl.verify():
-            tally.fail(p)
+            tally.problem(p)
+    diag.update(wl.details())
     wl.unload()
+    # after the timed passes, so that it stays out of setup_s
+    diag["host_canary_s"] = probes.host_canary_s()
     return metrics, diag, tally
 
 
@@ -291,10 +301,10 @@ def main(argv=None) -> int:
         session_s = process_age_s()
         tracer.add("session.start", time.perf_counter() - session_s, time.perf_counter())
         try:
-            info = host_info(cores, spark, args.seed)
             for name in names:
                 results.append((name, *run_workload(spark, name, args, session_s, workdir,
                                                     tracer)))
+            info = host_info(cores, spark, args.seed)
         finally:
             stop_session(spark)
     shutil.rmtree(workdir / "commit", ignore_errors=True)
@@ -306,11 +316,12 @@ def main(argv=None) -> int:
             metrics["peak_rss_mb"] = rss.peak_mb
         print(f"{name}: " + "  ".join(f"{k}={v:.4g} {units[k]}" for k, v in metrics.items())
               + f"  error_rate={tally.failed / tally.attempted:.4g} fraction"
-              f" ({tally.failed}/{tally.attempted} passes)")
-        print("# diag " + json.dumps({**info, **diag}))
+              f" ({tally.failed}/{tally.attempted} passes;"
+              f" {tally.checks_failed} other checks failed)")
+        print("# diag " + json.dumps({**info, **diag, "peak_rss_split": rss.peak_split}))
         for p in tally.problems:
             print(f"# problem {p.splitlines()[0]}")
-        out["correct"] &= tally.failed == 0
+        out["correct"] &= tally.correct
         out["attempted"] += tally.attempted
         out["failed"] += tally.failed
         prefix = f"{name}." if len(names) > 1 else ""
@@ -332,7 +343,7 @@ LAYER_UNITS = {
     "session.start_s": "s", "session.warmup_s": "s",
     "layout.cache_s": "s", "layout.skew": "count",
     "spark.jobs": "count", "spark.stages": "count", "spark.tasks": "count",
-    "spark.executor_cpu_s": "s",
+    "spark.executor_cpu_s": "s", "spark.gc_s": "s",
     "spark.shuffle_write_bytes": "bytes", "spark.shuffle_read_bytes": "bytes",
     "trace.run_s": "s", "trace.overhead": "fraction",
 }
@@ -352,10 +363,9 @@ def trace_workload(wl, tally: Tally, tracer, session_s: float, su: dict) -> tupl
     out["trace.overhead"] = out["trace.run_s"] / statistics.median(plain) - 1
     with tracer.span(f"decompose:{wl.name}"):
         layers = wl.decompose()
-    # usually 0 on these inputs, so kept with the layer split rather than
-    # among the metrics compared run to run
-    for k in ("spark.gc_s", "spark.spill_bytes"):
-        layers[k] = out.pop(k)
+    # 0 on these inputs, so kept with the layer split rather than among the
+    # metrics compared run to run
+    layers["spark.spill_bytes"] = out.pop("spark.spill_bytes")
     return out, layers
 
 

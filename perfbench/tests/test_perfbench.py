@@ -1,11 +1,13 @@
-"""Tests of the benchmark's own code: seeded inputs, the order-insensitive
-checksum, prefix deltas and the Spark status-store reader.
+"""Tests of the benchmark's own code: seeded inputs and their recorded row
+counts, the order-insensitive checksum, prefix deltas, pass accounting and
+the Spark status-store reader.
 
     python -m pytest perfbench/tests -q
 """
 
 from __future__ import annotations
 
+import json
 import random
 import sys
 from pathlib import Path
@@ -18,6 +20,8 @@ sys.path[:0] = [str(HERE.parent), str(HERE)]
 import checks  # noqa: E402
 import inputs  # noqa: E402
 import probes  # noqa: E402
+import run  # noqa: E402
+import workloads  # noqa: E402
 
 
 def test_row_counts_do_not_depend_on_the_seed():
@@ -27,6 +31,37 @@ def test_row_counts_do_not_depend_on_the_seed():
         assert len(inputs.context(seed, t)) == len(inputs.context(0, inputs.transcripts(0, 200)))
         docs, bench = inputs.documents(seed, 600)
         assert (len(docs), len(bench)) == (600, 200)
+
+
+def test_recorded_row_counts_match_the_generators():
+    with open(HERE / "reference.json") as f:
+        ref = json.load(f)
+    assert set(ref) == set(workloads.WORKLOADS)
+    for name, cls in workloads.WORKLOADS.items():
+        wl = object.__new__(cls)  # generate() needs the seed, not a session
+        wl.seed = 3
+        assert {k: len(v) for k, v in wl.generate().items()} == ref[name]["input_rows"]
+
+
+def test_failed_checks_outside_passes_are_not_failed_passes():
+    class Fake:
+        def run_pass(self, i):
+            if i == 1:
+                raise RuntimeError("boom")
+            return {"rows": 1}
+
+        def after_pass(self, i):
+            pass
+
+        def check(self, res):
+            return []
+
+    tally = run.Tally()
+    for i in range(3):
+        tally.run(Fake(), i)
+    tally.problem("input rows differ")
+    assert (tally.attempted, tally.failed, tally.checks_failed) == (3, 1, 1)
+    assert not tally.correct and len(tally.problems) == 2
 
 
 def test_context_never_duplicates_a_key_and_ties_land_on_turns():
@@ -128,9 +163,31 @@ def test_status_store_reader_counts_a_toy_job_with_the_ui_off(spark):
     assert probes.jvm_gc_s(sc) >= 0
 
 
+def test_rss_skips_a_child_that_still_maps_its_parents_pages():
+    import os  # noqa: PLC0415
+    import time  # noqa: PLC0415
+
+    with open("/proc/self/comm") as f:
+        me = f.read().strip()
+    before = probes.tree_rss_mb()[me][0]
+    pid = os.fork()
+    if pid == 0:  # the child maps nothing of its own, then leaves
+        time.sleep(1.0)
+        os._exit(0)
+    try:
+        time.sleep(0.3)
+        assert probes.tree_rss_mb()[me][0] == before
+    finally:
+        os.waitpid(pid, 0)
+
+
 def test_process_tree_probes_see_this_process():
     import os  # noqa: PLC0415
 
     assert probes.tree_pids()[0] == os.getpid()
     assert probes.tree_cpu_s() > 0
-    assert probes.tree_rss_mb() > 0
+    with open("/proc/self/comm") as f:
+        me = f.read().strip()
+    # other entries may read 0: a child that has exited but is not yet reaped
+    n, mb = probes.tree_rss_mb()[me]
+    assert n >= 1 and mb > 0

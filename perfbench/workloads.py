@@ -1,4 +1,4 @@
-"""The four benchmark workloads.
+"""The benchmark workloads.
 
 Each workload builds its cached inputs from a seed (``load``), runs one
 steady pass from cached input to a complete, checksummed result
@@ -6,22 +6,21 @@ steady pass from cached input to a complete, checksummed result
 (``verify``) and, for the traced run, splits its time over the library's
 layers by timing calls into their public functions (``decompose``).
 
-* ``turn_features`` — as-of join → lag/lead → LOCF → sessionize → Arrow
-  embedding kernel: the paper's headline chain (``temporal``, ``kernels``).
-* ``towhee_ops`` — Towhee-style ``Pipeline`` map/filter/flat_map with
-  plain-Python callables, then count and time windows folded in Python
-  (``pipeline``; one ``applyInPandas`` group per window).
+* ``transcripts`` — the paper's headline chain, as-of join → lag/lead →
+  LOCF → sessionize → Arrow embedding kernel (``temporal``, ``kernels``);
+  the write side, as-of join + LOCF committed with
+  ``lineage.write_with_lineage``, resumed and verified (``lineage``); and
+  Towhee-style ``Pipeline`` map/filter/flat_map with plain-Python
+  callables, then count and time windows folded in Python (``pipeline``).
 * ``doc_curation`` — the ``pretraining_curation`` preset: Gopher gate,
   exact and MinHash near-dup removal, benchmark decontamination
   (``functions.text``, ``functions.dedup``, ``functions.curation``).
-* ``feature_commit`` — as-of join + LOCF committed with
-  ``lineage.write_with_lineage``, resumed, and verified (``lineage``,
-  ``sources``-style parquet writes).
 """
 
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 import shutil
 import statistics
@@ -42,7 +41,11 @@ from spans import Tracer
 TOLERANCE_S = 3600.0
 GAP_S = 1800.0
 EMBED_DIM = 32
-REPS = 3  # repetitions per traced prefix; each prefix reports its median
+N_BUCKETS = 8
+WARMUP_PASSES = 1  # passes run before timing starts (code generation, JIT, workers)
+# runs per traced prefix, interleaved; each prefix reports their median
+# (two, to keep a traced run within its time: the longest prefix takes 7 s)
+REPS = 2
 
 
 def noop(df: DataFrame) -> None:
@@ -50,7 +53,7 @@ def noop(df: DataFrame) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def interleaved_prefix_medians(tracer, prefixes: dict, reps: int = REPS) -> list[float]:
+def interleaved_prefix_medians(tracer, prefixes: dict, reps: int) -> list[float]:
     """Median wall time of each forced prefix (name -> run function), the
     prefixes interleaved round by round so that a slow spell of the host
     lands on all of them. Each run is one span named after its prefix."""
@@ -67,6 +70,7 @@ def interleaved_prefix_medians(tracer, prefixes: dict, reps: int = REPS) -> list
 class Workload:
     name = ""
     sizes: dict = {}
+    EXPECT = ("rows", "checksum")  # result keys every pass must reproduce
 
     def __init__(self, spark, seed: int, workdir: str):
         self.spark, self.seed, self.workdir = spark, seed, workdir
@@ -120,114 +124,25 @@ class Workload:
         """Problems with one pass's result; the first result becomes the
         expected one when no reference is recorded for this seed."""
         if self.expected is None:
-            self.expected = {"rows": res["rows"], "checksum": res["checksum"]}
+            self.expected = {k: res[k] for k in self.EXPECT}
         return [f"{k} {res[k]} != expected {v}" for k, v in self.expected.items()
                 if res[k] != v]
 
     def verify(self) -> list[str]:
         return []
 
+    def details(self) -> dict:
+        """Per-pass splits for the diagnostics line."""
+        return {}
+
     def decompose(self) -> dict[str, float]:
         return {}
 
 
-# -- turn_features -----------------------------------------------------------
-
-def _transcript_frames(spark, pdfs, cores) -> dict[str, DataFrame]:
-    from towhee_spark.layout import repartition_by_key  # noqa: PLC0415
-    from towhee_spark.schema import CONTEXT_SCHEMA, TRANSCRIPT_SCHEMA  # noqa: PLC0415
-
-    turns = spark.createDataFrame(pdfs["turns"], schema=TRANSCRIPT_SCHEMA)
-    ctx = spark.createDataFrame(pdfs["context"], schema=CONTEXT_SCHEMA)
-    return {"turns": repartition_by_key(turns, "conv_id", num_partitions=2 * cores),
-            "context": ctx}
-
-
-def turn_chain(turns: DataFrame, ctx: DataFrame, upto: int = 5) -> DataFrame:
-    """The headline chain cut after stage ``upto`` (0 = the cached turns)."""
-    from towhee_spark.kernels import embed_text_udf  # noqa: PLC0415
-    from towhee_spark.temporal import asof_join, lag_lead, locf, sessionize  # noqa: PLC0415
-
-    if upto == 0:
-        return turns
-    j = asof_join(turns, ctx, direction="backward", tolerance=TOLERANCE_S,
-                  matched_ts_col="ctx_ts")
-    if upto >= 2:
-        j = lag_lead(j.withColumn("text_len", F.length("text")), ["text_len"], [1, 2, -1])
-    if upto >= 3:
-        j = locf(j, ["tool"])
-    if upto >= 4:
-        j = sessionize(j, gap=GAP_S, seq_out="session_seq")
-    if upto >= 5:
-        j = j.withColumn("emb", embed_text_udf(dim=EMBED_DIM)(F.col("text")))
-    return j
-
-
-class TurnFeatures(Workload):
-    name = "turn_features"
-    sizes = {"n_convs": 4_000}
-    STAGES = ("temporal.asof_s", "temporal.lag_lead_s", "temporal.locf_s",
-              "temporal.sessionize_s", "kernels.embed_s")
-
-    def generate(self):
-        turns = inputs.transcripts(self.seed, **self.sizes)
-        return {"turns": turns, "context": inputs.context(self.seed, turns)}
-
-    def to_spark(self, pdfs):
-        return _transcript_frames(self.spark, pdfs, self.cores)
-
-    def chain(self, upto: int = 5) -> DataFrame:
-        return turn_chain(self.frames["turns"], self.frames["context"], upto)
-
-    def run_pass(self, i):
-        out = self.chain()
-        return checks.spark_checksum(
-            out, F.sum(F.when(F.col("ctx_ts") > F.col("ts"), 1).otherwise(0)).alias("leaks"))
-
-    def check(self, res):
-        problems = super().check(res)
-        if res["leaks"]:
-            problems.append(f"{res['leaks']} turns joined context from their future")
-        if res["rows"] != self.input_rows:
-            problems.append(f"{res['rows']} output rows for {self.input_rows} turns")
-        return problems
-
-    def verify(self):
-        turns, ctx = self.pdfs["turns"], self.pdfs["context"]
-        sizes = turns.groupby("conv_id").size()
-        rng = np.random.default_rng(self.seed)
-        sample = [sizes.idxmax(), *rng.choice(sizes.index.to_numpy(), 4, replace=False)]
-        want = checks.turn_features_oracle(
-            turns[turns.conv_id.isin(sample)], ctx[ctx.conv_id.isin(sample)],
-            tolerance_s=TOLERANCE_S, gap_s=GAP_S, dim=EMBED_DIM)
-        got = (self.chain().filter(F.col("conv_id").isin(sample)).toPandas()
-               .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True))
-        cols = ["ctx_score", "ctx_label", "ctx_ts", "text_len_lag1", "text_len_lag2",
-                "text_len_lead1", "tool_ff", "session_seq", "emb"]
-        return [f"oracle: {p}" for p in checks.compare_frames(got, want, cols)]
-
-    def decompose(self):
-        names = ("cached_input", "asof", "lag_lead", "locf", "sessionize", "embed")
-        medians = interleaved_prefix_medians(
-            self.tracer, {n: lambda k=k: noop(self.chain(k)) for k, n in enumerate(names)})
-        out = dict(zip(self.STAGES, checks.prefix_deltas(medians)[1:]))
-        from towhee_spark.plans.profile import profile_run  # noqa: PLC0415
-
-        full = self.chain()
-        profile_run(full)
-        py = probes.plan_operator_metrics(full, "ArrowEvalPython")
-        out.update({
-            "temporal.exchanges": probes.plan_operator_metrics(full, "Exchange")["__nodes"],
-            "kernels.py_run_s": py.get("time to run Python workers", 0) / 1e3,
-            "kernels.py_bytes_out": py.get("data sent to Python workers", 0),
-            "kernels.py_bytes_in": py.get("data returned from Python workers", 0),
-        })
-        return out
-
-
-# -- towhee_ops --------------------------------------------------------------
-# Plain-Python callables, as a Towhee user writes them; native=False keeps
-# them on the Python path instead of compiling them to Column expressions.
+# -- transcripts ---------------------------------------------------------------
+# Plain-Python callables for the Towhee operators, as a Towhee user writes
+# them; native=False keeps them on the Python path instead of compiling
+# them to Column expressions.
 
 def n_words(text):
     return len(text.split())
@@ -250,6 +165,27 @@ def fold_sum(values):
 
 COUNT_WINDOW = (16, 8)     # rows: size, step
 TIME_WINDOW_S = (7200, 3600)  # seconds: size, step
+OPS_APPLY = {"by": "conv_id", "order": ("ts", "turn_idx")}
+
+
+def turn_chain(turns: DataFrame, ctx: DataFrame, upto: int = 5) -> DataFrame:
+    """The headline chain cut after stage ``upto`` (0 = the cached turns)."""
+    from towhee_spark.kernels import embed_text_udf  # noqa: PLC0415
+    from towhee_spark.temporal import asof_join, lag_lead, locf, sessionize  # noqa: PLC0415
+
+    if upto == 0:
+        return turns
+    j = asof_join(turns, ctx, direction="backward", tolerance=TOLERANCE_S,
+                  matched_ts_col="ctx_ts")
+    if upto >= 2:
+        j = lag_lead(j.withColumn("text_len", F.length("text")), ["text_len"], [1, 2, -1])
+    if upto >= 3:
+        j = locf(j, ["tool"])
+    if upto >= 4:
+        j = sessionize(j, gap=GAP_S, seq_out="session_seq")
+    if upto >= 5:
+        j = j.withColumn("emb", embed_text_udf(dim=EMBED_DIM)(F.col("text")))
+    return j
 
 
 def towhee_pipelines(upto: int = 5):
@@ -273,42 +209,158 @@ def towhee_pipelines(upto: int = 5):
                           fold_sum, out_types=[T.LongType()]))
 
 
-class TowheeOps(Workload):
-    name = "towhee_ops"
-    sizes = {"n_convs": 45, "hot_convs": 1, "hot_turns": 250}
-    APPLY = {"by": "conv_id", "order": ("ts", "turn_idx")}
+class Transcripts(Workload):
+    """Everything the library runs over conversation transcripts. One pass:
+
+    1. features: the headline chain (as-of join → lag/lead → LOCF →
+       sessionize → Arrow embedding) to a checksum sink;
+    2. commit: the lighter as-of + LOCF features written with
+       ``write_with_lineage`` to a fresh directory, a resume call that must
+       write nothing, and ``verify_lineage``; its bucketed output shuffle
+       uses the layout differently from the checksum sink;
+    3. ops: Towhee ``Pipeline`` map/filter/flat_map with Python callables,
+       then a count and a time window folded in Python, over a small
+       transcript set (one ``applyInPandas`` group per window).
+    """
+    name = "transcripts"
+    sizes = {"n_convs": 3_000}
+    ops_sizes = {"n_convs": 45, "hot_convs": 1, "hot_turns": 250}
+    EXPECT = ("rows", "checksum", "commit_checksum", "ops_rows", "ops_checksum")
+    STAGES = ("temporal.asof_s", "temporal.lag_lead_s", "temporal.locf_s",
+              "temporal.sessionize_s", "kernels.embed_s")
+    parts: list[dict] = []  # per pass: time of each part, bytes/files committed
     _count_ref: dict | None = None
 
     def generate(self):
         turns = inputs.transcripts(self.seed, **self.sizes)
-        return {"turns": turns}
+        return {"turns": turns, "context": inputs.context(self.seed, turns),
+                "ops_turns": inputs.transcripts(self.seed, **self.ops_sizes)}
 
     def to_spark(self, pdfs):
         from towhee_spark.layout import repartition_by_key  # noqa: PLC0415
-        from towhee_spark.schema import TRANSCRIPT_SCHEMA  # noqa: PLC0415
+        from towhee_spark.schema import CONTEXT_SCHEMA, TRANSCRIPT_SCHEMA  # noqa: PLC0415
 
-        turns = self.spark.createDataFrame(pdfs["turns"], schema=TRANSCRIPT_SCHEMA)
-        # one partition per core: at this size every extra task is one more
-        # Python-runner start per operator, not more parallel work
-        return {"turns": repartition_by_key(turns, "conv_id", num_partitions=self.cores)}
+        def df(name, schema):
+            return self.spark.createDataFrame(pdfs[name], schema=schema)
 
-    def outputs(self, upto: int = 5) -> tuple[DataFrame, DataFrame]:
+        return {
+            "turns": repartition_by_key(df("turns", TRANSCRIPT_SCHEMA), "conv_id",
+                                        num_partitions=2 * self.cores),
+            "context": df("context", CONTEXT_SCHEMA),
+            # one partition per core: at this size every extra task is one
+            # more Python-runner start per operator, not more parallel work
+            "ops_turns": repartition_by_key(df("ops_turns", TRANSCRIPT_SCHEMA), "conv_id",
+                                            num_partitions=self.cores),
+        }
+
+    def load(self):
+        self.parts, self._count_ref = [], None
+        return super().load()
+
+    @property
+    def n_turns(self) -> int:
+        return len(self.pdfs["turns"])
+
+    @property
+    def input_rows(self) -> int:
+        return self.n_turns + len(self.pdfs["ops_turns"])
+
+    # -- the three parts -----------------------------------------------------
+    def chain(self, upto: int = 5) -> DataFrame:
+        return turn_chain(self.frames["turns"], self.frames["context"], upto)
+
+    def features(self) -> DataFrame:
+        """The commit's lighter chain: as-of join + LOCF."""
+        from towhee_spark.temporal import asof_join, locf  # noqa: PLC0415
+
+        j = asof_join(self.frames["turns"], self.frames["context"], direction="backward",
+                      tolerance=TOLERANCE_S, matched_ts_col="ctx_ts")
+        return locf(j, ["tool"])
+
+    def target(self, i) -> str:
+        return os.path.join(self.workdir, "commit", f"pass-{i}")
+
+    def commit(self, base: str) -> dict:
+        """Write, resume and verify once; returns the three results and
+        the time each took."""
+        from towhee_spark.lineage import verify_lineage, write_with_lineage  # noqa: PLC0415
+
+        df = self.features()
+        kw = {"key": "conv_id", "n_buckets": N_BUCKETS, "input_snapshot": f"seed-{self.seed}"}
+        t0 = time.perf_counter()
+        first = write_with_lineage(df, base, **kw)
+        t1 = time.perf_counter()
+        again = write_with_lineage(df, base, **kw)
+        t2 = time.perf_counter()
+        ok = verify_lineage(df, base)
+        t3 = time.perf_counter()
+        return {"first": first, "again": again, "ok": ok,
+                "write_s": t1 - t0, "resume_s": t2 - t1, "verify_s": t3 - t2}
+
+    def ops_outputs(self, upto: int = 5) -> tuple[DataFrame, DataFrame]:
         cw, tw = towhee_pipelines(upto)
-        t = self.frames["turns"]
-        return cw.apply(t, **self.APPLY), tw.apply(t, **self.APPLY)
+        t = self.frames["ops_turns"]
+        return cw.apply(t, **OPS_APPLY), tw.apply(t, **OPS_APPLY)
 
     def run_pass(self, i):
-        # both outputs are a few hundred rows: collect them, so that every
-        # pass's count windows are checked against the pandas reference
-        cw, tw = self.outputs()
+        t0 = time.perf_counter()
+        res = checks.spark_checksum(
+            self.chain(),
+            F.sum(F.when(F.col("ctx_ts") > F.col("ts"), 1).otherwise(0)).alias("leaks"))
+        t1 = time.perf_counter()
+        base = self.target(i)
+        shutil.rmtree(base, ignore_errors=True)
+        c = self.commit(base)
+        t2 = time.perf_counter()
+        # both window outputs are a few hundred rows: collect them, so that
+        # every pass's count windows are checked against pandas
+        cw, tw = self.ops_outputs()
         counts = sorted((r["conv_id"], r["__row_order"], r["w_sum"]) for r in cw.collect())
         times = sorted(tuple(r) for r in tw.collect())
+        t3 = time.perf_counter()
+        self.parts.append({"chain_s": t1 - t0, "commit_s": t2 - t1, "ops_s": t3 - t2,
+                           **{k: c[k] for k in ("write_s", "resume_s", "verify_s")}})
+
+        rows = checksum = 0
+        mdir = os.path.join(base, "_lineage")
+        for f in sorted(os.listdir(mdir)):
+            if f.startswith("bucket="):
+                with open(os.path.join(mdir, f)) as fh:
+                    m = json.load(fh)
+                rows += m["rows"]
+                checksum = (checksum * 1_000_003 + m["checksum"]) % (2**61 - 1)
         digest = hashlib.sha256(repr((counts, times)).encode()).digest()
-        return {"rows": len(counts) + len(times),
-                "checksum": int.from_bytes(digest[:7], "big"), "counts": counts}
+        return {**res, "commit_rows": rows, "commit_checksum": checksum,
+                "verified": c["ok"], "written": len(c["first"]["written"]),
+                "rewritten": len(c["again"]["written"]),
+                "ops_rows": len(counts) + len(times),
+                "ops_checksum": int.from_bytes(digest[:7], "big"), "counts": counts}
+
+    def after_pass(self, i):
+        data = os.path.join(self.target(i), "data")
+        found = [os.path.join(d, f) for d, _, fs in os.walk(data) for f in fs
+                 if f.endswith(".parquet")]
+        self.parts[-1].update(files=len(found), bytes=sum(os.path.getsize(f) for f in found))
+        shutil.rmtree(self.target(i), ignore_errors=True)
+
+    def details(self):
+        return {"parts": self.parts}
 
     def check(self, res):
         problems = super().check(res)
+        n = self.n_turns
+        if res["leaks"]:
+            problems.append(f"{res['leaks']} turns joined context from their future")
+        if res["rows"] != n:
+            problems.append(f"{res['rows']} output rows for {n} turns")
+        if not res["verified"]:
+            problems.append("verify_lineage returned False")
+        if res["written"] != N_BUCKETS:
+            problems.append(f"{res['written']} of {N_BUCKETS} buckets committed")
+        if res["rewritten"]:
+            problems.append(f"resume rewrote {res['rewritten']} buckets")
+        if res["commit_rows"] != n:
+            problems.append(f"{res['commit_rows']} rows committed for {n} turns")
         want = self.count_reference()
         got = {(c, w): s for c, w, s in res["counts"]}
         if got != want:
@@ -317,9 +369,9 @@ class TowheeOps(Workload):
         return problems
 
     def count_reference(self) -> dict:
-        """{(conv_id, window id): folded sum} computed in pandas."""
+        """{(conv_id, window id): folded sum} of the count window, in pandas."""
         if self._count_ref is None:
-            t = self.pdfs["turns"].sort_values(["conv_id", "ts", "turn_idx"])
+            t = self.pdfs["ops_turns"].sort_values(["conv_id", "ts", "turn_idx"])
             t = t.assign(n_words=t.text.map(n_words))
             t = t[t.n_words.map(keep_long)]
             t = t.loc[t.index.repeat(t.text.map(lambda s: len(first_pieces(s))))]
@@ -331,41 +383,72 @@ class TowheeOps(Workload):
                     self._count_ref[(conv, w)] = sum(v[step * w:step * w + size])
         return self._count_ref
 
-    def load(self):
-        self._count_ref = None
-        return super().load()
+    def verify(self):
+        """The pandas oracle on five conversations, the hottest included."""
+        turns, ctx = self.pdfs["turns"], self.pdfs["context"]
+        sizes = turns.groupby("conv_id").size()
+        rng = np.random.default_rng(self.seed)
+        sample = [sizes.idxmax(), *rng.choice(sizes.index.to_numpy(), 4, replace=False)]
+        want = checks.turn_features_oracle(
+            turns[turns.conv_id.isin(sample)], ctx[ctx.conv_id.isin(sample)],
+            tolerance_s=TOLERANCE_S, gap_s=GAP_S, dim=EMBED_DIM)
+        got = (self.chain().filter(F.col("conv_id").isin(sample)).toPandas()
+               .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True))
+        cols = ["ctx_score", "ctx_label", "ctx_ts", "text_len_lag1", "text_len_lag2",
+                "text_len_lead1", "tool_ff", "session_seq", "emb"]
+        return [f"oracle: {p}" for p in checks.compare_frames(got, want, cols)]
 
+    # -- traced run ------------------------------------------------------------
     def decompose(self):
-        t = self.frames["turns"]
-        sc = self.spark.sparkContext
+        from towhee_spark.plans.profile import profile_run  # noqa: PLC0415
 
-        def cut(k):
+        sc = self.spark.sparkContext
+        ops_in = self.frames["ops_turns"]
+
+        def ops_cut(k):
             p, _ = towhee_pipelines(k)
-            return p.apply(t, **self.APPLY)
+            return p.apply(ops_in, **OPS_APPLY)
 
         def time_window_only():
             _, tw = towhee_pipelines()
-            return tw.apply(t, **self.APPLY)
+            return tw.apply(ops_in, **OPS_APPLY)
 
-        names = ("cached_input", "map", "filter", "flat_map", "window")
-        runs = {n: lambda k=k: noop(cut(k)) for k, n in enumerate(names)}
+        chain_names = ("cached_input", "asof", "lag_lead", "locf", "sessionize", "embed")
+        ops_names = ("ops_input", "map", "filter", "flat_map", "window")
+        runs = {n: lambda k=k: noop(self.chain(k)) for k, n in enumerate(chain_names)}
+        runs.update({n: lambda k=k: noop(ops_cut(k)) for k, n in enumerate(ops_names)})
         runs["time_window"] = lambda: noop(time_window_only())
-        med = interleaved_prefix_medians(self.tracer, runs)
-        chain = checks.prefix_deltas(med[:5])
-        out = {"pipeline.map_s": chain[1], "pipeline.filter_s": chain[2],
-               "pipeline.flat_map_s": chain[3], "pipeline.window_s": chain[4],
-               "pipeline.time_window_s": checks.prefix_deltas([med[3], med[5]])[1]}
+        med = interleaved_prefix_medians(self.tracer, runs, REPS)
+        out = dict(zip(self.STAGES, checks.prefix_deltas(med[:6])[1:]))
+        ops = checks.prefix_deltas(med[6:11])
+        out.update({"pipeline.map_s": ops[1], "pipeline.filter_s": ops[2],
+                    "pipeline.flat_map_s": ops[3], "pipeline.window_s": ops[4],
+                    "pipeline.time_window_s": checks.prefix_deltas([med[9], med[11]])[1]})
+
+        # the commits of the passes after warm-up (untraced and traced)
+        steady = self.parts[WARMUP_PASSES:]
+        out.update({f"lineage.{k}": statistics.median(c[k] for c in steady)
+                    for k in ("write_s", "resume_s", "verify_s")})
+        out["lineage.bytes_written"] = steady[-1]["bytes"]
+        out["lineage.files_written"] = steady[-1]["files"]
+
+        full = self.chain()
+        profile_run(full)
+        py = probes.plan_operator_metrics(full, "ArrowEvalPython")
+        out.update({
+            "temporal.exchanges": probes.plan_operator_metrics(full, "Exchange")["__nodes"],
+            "kernels.py_run_s": py.get("time to run Python workers", 0) / 1e3,
+            "kernels.py_bytes_out": py.get("data sent to Python workers", 0),
+            "kernels.py_bytes_in": py.get("data returned from Python workers", 0),
+        })
 
         apply_times = []
         for r in range(REPS):
             t0 = time.perf_counter()
-            (cw, tw), c = probes.jobs_during(sc, f"perfbench-apply-{r}", self.outputs)
+            (cw, tw), c = probes.jobs_during(sc, f"perfbench-apply-{r}", self.ops_outputs)
             apply_times.append(time.perf_counter() - t0)
         out["pipeline.apply_s"] = statistics.median(apply_times)
         out["pipeline.probe_jobs"] = c["jobs"]
-
-        from towhee_spark.plans.profile import profile_run  # noqa: PLC0415
-
         groups = py_ms = 0
         for df in (cw, tw):
             profile_run(df)
@@ -384,7 +467,9 @@ NEARDUP_THRESHOLD = 0.8
 
 class DocCuration(Workload):
     name = "doc_curation"
-    sizes = {"n_docs": 3_000}
+    sizes = {"n_docs": 1_000}
+    survivors: pd.DataFrame | None = None  # the first pass's output, for verify
+    build_walls: list[float] = []  # plan build time of each pass
 
     def generate(self):
         docs, bench = inputs.documents(self.seed, **self.sizes)
@@ -403,23 +488,35 @@ class DocCuration(Workload):
                        benchmark=self.frames["benchmark"])
         return run(self.frames["docs"])
 
+    def load(self):
+        self.survivors, self.build_walls = None, []
+        return super().load()
+
     def run_pass(self, i):
         from towhee_spark.functions.dedup import release_cached  # noqa: PLC0415
 
+        t0 = time.perf_counter()
         out = self.build()
+        self.build_walls.append(time.perf_counter() - t0)
         try:
-            return checks.spark_checksum(out)
+            res = checks.spark_checksum(out)
+            if i == 0:
+                # the oracle's input comes from the warm-up pass, so that
+                # verify costs no extra build
+                self.survivors = out.select("doc_id", "text").toPandas()
+            return res
         finally:
             release_cached(out)
 
-    def verify(self):
-        """Survivors clear the 50-word floor and are unique after
-        normalization; duplicates were removed."""
-        from towhee_spark.functions.dedup import release_cached  # noqa: PLC0415
+    def details(self):
+        return {"build_walls": self.build_walls}
 
-        out = self.build()
-        got = out.select("doc_id", "text").toPandas()
-        release_cached(out)
+    def verify(self):
+        """Survivors of the first pass clear the 50-word floor and are
+        unique after normalization; duplicates were removed."""
+        got = self.survivors
+        if got is None:
+            return ["oracle: the first pass collected no survivors"]
         norm = got.text.str.lower().str.split().str.join(" ")
         problems = []
         if (norm.str.count(" ") + 1 < 50).any():
@@ -467,18 +564,15 @@ class DocCuration(Workload):
         med = interleaved_prefix_medians(self.tracer, {
             "cached_input": forced(lambda: docs), "gopher": forced(gopher),
             "exact": forced(exact), "minhash": forced(pairs), "cc": forced(survivors),
-            "decontam": forced(decontaminated)})
+            "decontam": forced(decontaminated)}, REPS)
         d = checks.prefix_deltas(med)
         out = {"text.gopher_s": d[1], "dedup.exact_s": d[2], "dedup.minhash_s": d[3],
                "dedup.cc_s": d[4], "curation.decontam_s": d[5]}
 
-        build_times = []
-        for r in range(REPS):
-            t0 = time.perf_counter()
-            built, c = probes.jobs_during(sc, f"perfbench-build-{r}", self.build)
-            build_times.append(time.perf_counter() - t0)
-            dedup.release_cached(built)
-        out["curation.build_s"] = statistics.median(build_times)
+        # build time of the passes after warm-up (untraced and traced)
+        out["curation.build_s"] = statistics.median(self.build_walls[WARMUP_PASSES:])
+        built, c = probes.jobs_during(sc, "perfbench-build", self.build)
+        dedup.release_cached(built)
         out["curation.build_jobs"] = c["jobs"]
 
         cand_df, pair_df = pairs(0.0), pairs()
@@ -490,97 +584,4 @@ class DocCuration(Workload):
         return out
 
 
-# -- feature_commit ----------------------------------------------------------
-
-N_BUCKETS = 8
-
-
-class FeatureCommit(Workload):
-    name = "feature_commit"
-    sizes = {"n_convs": 3_000}
-
-    def generate(self):
-        turns = inputs.transcripts(self.seed, **self.sizes)
-        return {"turns": turns, "context": inputs.context(self.seed, turns)}
-
-    def to_spark(self, pdfs):
-        return _transcript_frames(self.spark, pdfs, self.cores)
-
-    def features(self) -> DataFrame:
-        from towhee_spark.temporal import asof_join, locf  # noqa: PLC0415
-
-        j = asof_join(self.frames["turns"], self.frames["context"], direction="backward",
-                      tolerance=TOLERANCE_S, matched_ts_col="ctx_ts")
-        return locf(j, ["tool"])
-
-    def target(self, i) -> str:
-        return os.path.join(self.workdir, "commit", f"pass-{i}")
-
-    def commit(self, base: str) -> dict:
-        """Write, resume and verify once; returns the three results and
-        the time each took."""
-        from towhee_spark.lineage import verify_lineage, write_with_lineage  # noqa: PLC0415
-
-        df = self.features()
-        kw = {"key": "conv_id", "n_buckets": N_BUCKETS, "input_snapshot": f"seed-{self.seed}"}
-        t0 = time.perf_counter()
-        first = write_with_lineage(df, base, **kw)
-        t1 = time.perf_counter()
-        again = write_with_lineage(df, base, **kw)
-        t2 = time.perf_counter()
-        ok = verify_lineage(df, base)
-        t3 = time.perf_counter()
-        return {"first": first, "again": again, "ok": ok,
-                "write_s": t1 - t0, "resume_s": t2 - t1, "verify_s": t3 - t2}
-
-    def run_pass(self, i):
-        import json  # noqa: PLC0415
-
-        base = self.target(i)
-        shutil.rmtree(base, ignore_errors=True)
-        c = self.commit(base)
-        rows = checksum = 0
-        mdir = os.path.join(base, "_lineage")
-        for f in sorted(os.listdir(mdir)):
-            if f.startswith("bucket="):
-                with open(os.path.join(mdir, f)) as fh:
-                    m = json.load(fh)
-                rows += m["rows"]
-                checksum = (checksum * 1_000_003 + m["checksum"]) % (2**61 - 1)
-        return {"rows": rows, "checksum": checksum, "verified": c["ok"],
-                "written": len(c["first"]["written"]), "rewritten": len(c["again"]["written"])}
-
-    def after_pass(self, i):
-        shutil.rmtree(self.target(i), ignore_errors=True)
-
-    def check(self, res):
-        problems = super().check(res)
-        if not res["verified"]:
-            problems.append("verify_lineage returned False")
-        if res["written"] != N_BUCKETS:
-            problems.append(f"{res['written']} of {N_BUCKETS} buckets committed")
-        if res["rewritten"]:
-            problems.append(f"resume rewrote {res['rewritten']} buckets")
-        if res["rows"] != self.input_rows:
-            problems.append(f"{res['rows']} rows committed for {self.input_rows} turns")
-        return problems
-
-    def decompose(self):
-        timings, files, size = [], 0, 0
-        for r in range(REPS):
-            base = os.path.join(self.workdir, "commit", f"trace-{r}")
-            shutil.rmtree(base, ignore_errors=True)
-            timings.append(self.commit(base))
-            data = os.path.join(base, "data")
-            found = [os.path.join(d, f) for d, _, fs in os.walk(data) for f in fs
-                     if f.endswith(".parquet")]
-            files, size = len(found), sum(os.path.getsize(f) for f in found)
-            shutil.rmtree(base, ignore_errors=True)
-        out = {f"lineage.{k}": statistics.median(t[k] for t in timings)
-               for k in ("write_s", "resume_s", "verify_s")}
-        out["lineage.bytes_written"] = size
-        out["lineage.files_written"] = files
-        return out
-
-
-WORKLOADS = {w.name: w for w in (TurnFeatures, TowheeOps, DocCuration, FeatureCommit)}
+WORKLOADS = {w.name: w for w in (Transcripts, DocCuration)}
