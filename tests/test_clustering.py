@@ -302,3 +302,30 @@ def test_kmeans_train_local_ragged_falls_back(spark):
     dist = clustering.kmeans_train(df, k=2, iters=2, impl="expr",
                                    collect_vectors=0)
     assert local == dist
+
+
+def test_kmeans_train_local_freeze_boundary_falls_back(spark):
+    """A component whose frozen value sits on a HALF_UP boundary the
+    local floor(p + 0.5) freeze gets wrong: 4.7683715820312495e-07 ·
+    2^20 = 0.49999999999999994, which F.round takes to 0 but p + 0.5
+    rounds to 1.0. The driver-local replay must fall back, so local and
+    distributed training agree."""
+    df = spark.createDataFrame(
+        [(6, [1.0, 4.7683715820312495e-07]), (7, [0.8, 0.2]),
+         (1, [0.0, 1.0]), (3, [0.1, 0.9])],
+        "vec_id long, embedding array<double>")
+    for impl in ("expr", "arrow"):
+        local = clustering.kmeans_train(df, k=2, iters=2, impl=impl)
+        dist = clustering.kmeans_train(df, k=2, iters=2, impl=impl,
+                                       collect_vectors=0)
+        assert local == dist, impl
+
+
+def test_kmeans_train_rejects_bad_impl_under_cap(spark):
+    """impl is validated before the collect probe, so a table under the
+    driver-local cap raises exactly as a large one does."""
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0])],
+        "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match="impl"):
+        clustering.kmeans_train(df, k=1, iters=1, impl="bogus")

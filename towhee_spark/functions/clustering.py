@@ -121,15 +121,19 @@ def _kmeans_train_local(
       (nextafter around every k·1e-6 + 5e-7);
     * argmax = first strict (1−cos6, cid) min over cid-ascending
       centroids == the expr path's array_sort-ascending head;
-    * freeze = floor(|x·2^20| + 0.5)·sign — exact HALF_UP at 0 decimals
-      (the 0.5 boundary is representable and the +0.5 add exact below
-      2^52; same verification), int64 sums, and the SAME Python
-      ``int / (n·scale)`` division _rebuild_cents performs.
+    * freeze = floor(|x·2^20| + 0.5)·sign — HALF_UP at 0 decimals
+      wherever the +0.5 add is exact, int64 sums, and the SAME Python
+      ``int / (n·scale)`` division _rebuild_cents performs. The add is
+      NOT exact for |p| ≥ 2^52 (odd integers tie-to-even up) nor just
+      below a k+0.5 boundary (p = 0.49999999999999994 sums to 1.0), so
+      any component within one ulp of k+0.5 (an exact tie is fine) or
+      past 2^52 is left to the distributed loop.
 
     Returns (False, None) on any shape the replica does not cover
-    (ragged/NULL-component vectors, non-finite cosines, sums that could
-    overflow int64) — the caller falls back to the distributed loop,
-    whose semantics are authoritative for those edges."""
+    (ragged/NULL-component vectors, freeze boundaries, non-finite
+    cosines, sums that could overflow int64) — the caller falls back to
+    the distributed loop, whose semantics are authoritative for those
+    edges."""
     import numpy as np  # noqa: PLC0415
     from decimal import ROUND_HALF_UP, Decimal  # noqa: PLC0415
 
@@ -151,6 +155,11 @@ def _kmeans_train_local(
     p = m * float(scale)
     if not np.isfinite(p).all():
         return False, None
+    ap = np.abs(p)
+    half_off = np.abs(ap - np.floor(ap) - 0.5)
+    if ((ap >= 2.0**52)
+            | ((half_off > 0) & (half_off <= np.spacing(ap)))).any():
+        return False, None
     fz = np.where(p >= 0, np.floor(p + 0.5), -np.floor(-p + 0.5))
     if float(np.abs(fz).max(initial=0.0)) * max(n_rows, 1) >= float(2**62):
         return False, None  # int64 sum could overflow; ANSI Spark would throw
@@ -171,7 +180,7 @@ def _kmeans_train_local(
             return False, None
         flat = cos.ravel()
         c6 = np.fromiter(
-            (float(Decimal(repr(x)).quantize(q6, rounding=ROUND_HALF_UP))
+            (float(Decimal(repr(float(x))).quantize(q6, rounding=ROUND_HALF_UP))
              for x in flat),
             dtype=np.float64, count=flat.size).reshape(cos.shape)
         d = 1.0 - c6
@@ -226,6 +235,8 @@ def kmeans_train(
     (id, vector) rows, so size it such that rows·dim·8 bytes stays well
     under ``spark.driver.maxResultSize`` (100k × dim 64 ≈ 51 MB; for
     dim ≥ 512 lower the cap, or pass 0 to always train distributed)."""
+    if impl not in ("arrow", "expr"):
+        raise ValueError(f"impl must be 'arrow' or 'expr', got {impl!r}")
     scale = 1 << scale_bits
     e = (
         index.select(

@@ -32,12 +32,6 @@ def token_count(text: Column | str) -> Column:
     return F.when(t == "", F.lit(0)).otherwise(F.size(F.split(t, r"\s+"))).cast("int")
 
 
-def word_regex_count(text: Column | str, pattern: str = r"[A-Za-z0-9']+") -> Column:
-    """BPE-ish token proxy: count of regex word pieces."""
-    c = F.col(text) if isinstance(text, str) else text
-    return F.regexp_count(F.coalesce(c, F.lit("")), F.lit(pattern)).cast("int")
-
-
 def _marker_hits(c: Column, words: list[str]) -> Column:
     # \b word \b occurrences over the lowercased text
     pat = r"\b(" + "|".join(words) + r")\b"

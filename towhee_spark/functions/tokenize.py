@@ -46,7 +46,9 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -224,11 +226,11 @@ def _wp_arrow(docs, vocab, id_col, text_col, max_word_chars, out_col):
     # O(len·max_piece) walk. Bounded by the distinct-word vocabulary.
     memo: dict[str, list[str]] = {}
 
-    @F.pandas_udf("array<string>")
-    def wp(texts: pd.Series) -> pd.Series:
+    @F.arrow_udf("array<string>")
+    def wp(texts: pa.Array) -> pa.Array:
         vset, mp = bv.value
         outs = []
-        for t in texts:
+        for t in texts.to_pylist():
             words = _normalize_py(t).split()
             pieces: list[str] = []
             for w in words:
@@ -237,7 +239,7 @@ def _wp_arrow(docs, vocab, id_col, text_col, max_word_chars, out_col):
                     got = memo[w] = _wp_py_word(w, vset, max_word_chars, mp)
                 pieces.extend(got)
             outs.append(pieces)
-        return pd.Series(outs)
+        return pa.array(outs, type=pa.list_(pa.string()))
 
     return docs.select(
         F.col(id_col),
@@ -527,11 +529,11 @@ def bpe_encode(
         # arrow twin of the expr path's distinct-word table
         memo: dict[str, list[str]] = {}
 
-        @F.pandas_udf("array<string>")
-        def enc(texts: pd.Series) -> pd.Series:
+        @F.arrow_udf("array<string>")
+        def enc(texts: pa.Array) -> pa.Array:
             ms = bm.value
             outs = []
-            for t in texts:
+            for t in texts.to_pylist():
                 words = [x for x in _normalize_py(t).split(" ") if x]
                 pieces: list[str] = []
                 for w in words:
@@ -540,7 +542,7 @@ def bpe_encode(
                         got = memo[w] = _bpe_py_word(w, ms)
                     pieces.extend(got)
                 outs.append(pieces)
-            return pd.Series(outs)
+            return pa.array(outs, type=pa.list_(pa.string()))
 
         return docs.select(
             F.col(id_col), enc(F.col(text_col)).alias(out_col)
@@ -654,15 +656,25 @@ def encode_ids(
     rows = id_table.select("piece", "piece_id").collect()  # k-row: vocab-sized
     mapping = {r["piece"]: int(r["piece_id"]) for r in rows}
     if impl == "arrow":
+        from towhee_spark.kernels import _list_array  # noqa: PLC0415
+
         sc = pieces.sparkSession.sparkContext
         bm = sc.broadcast(mapping)
 
-        @F.pandas_udf("array<int>")
-        def enc(ps: pd.Series) -> pd.Series:
+        @F.arrow_udf("array<int>")
+        def enc(ps: pa.Array) -> pa.Array:
+            # one dict lookup per DISTINCT piece of the batch (the embed
+            # kernels' dictionary-encode trick); a NULL array encodes empty
             m = bm.value
-            return pd.Series([[m.get(p, -1) for p in (arr if arr is not None
-                                                      else [])]
-                              for arr in ps])
+            flat = pc.dictionary_encode(pc.list_flatten(ps),
+                                        null_encoding="encode")
+            uniq = flat.dictionary.to_pylist()
+            ids = np.fromiter((m.get(p, -1) for p in uniq), dtype=np.int32,
+                              count=len(uniq))
+            lens = np.asarray(pc.list_value_length(ps).fill_null(0))
+            offsets = np.concatenate(([0], np.cumsum(lens)))
+            return _list_array(offsets, pa.array(
+                ids[np.asarray(flat.indices, dtype=np.int64)]))
 
         out = pieces.select(F.col(id_col), enc(F.col(pieces_col)).alias(out_col))
         return out.withColumn("n_tokens", F.size(out_col))

@@ -2,11 +2,17 @@
 
 Replaces Towhee's model-bearing operators (e.g. sentence_embedding.*,
 towhee/runtime/hub_ops/sentence_embedding.py:26) with batched
-``pandas_udf`` kernels: the Python boundary is crossed once per Arrow
+``arrow_udf`` kernels: the Python boundary is crossed once per Arrow
 batch, never per row, and heavy state (a model) is cached once per
 executor Python worker — mirroring Towhee's OperatorPool reuse
 (towhee/runtime/operator_manager/operator_pool.py:56-126) with a
 module-level cache.
+
+Every batch kernel has one shape: Arrow in, numpy math, Arrow out.
+Vector columns are read through ``_list_array_to_matrix`` (one flat
+values buffer gathered by the array's own offsets, plus a validity
+mask) and written through ``_mat_to_list_array`` (one flat buffer plus
+arithmetic offsets), so no per-row Python object exists on either side.
 
 The test/bench kernel is a deterministic hashed bag-of-tokens embedding:
 pure numpy, reproducible bit-for-bit by the single-node oracle
@@ -15,12 +21,14 @@ pure numpy, reproducible bit-for-bit by the single-node oracle
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 # ---------------------------------------------------------------------------
 # Per-worker operator cache (≈ Towhee OperatorPool Shareable semantics)
@@ -51,15 +59,7 @@ def _scatter_signs(out: np.ndarray, row_ids: np.ndarray, buckets: np.ndarray,
     return out
 
 
-def _token_hash(tok: str) -> int:
-    """Deterministic 32-bit token hash (crc32: C-speed, stable across runs
-    and processes — unlike builtin hash()); identical in oracle/engine."""
-    import zlib  # noqa: PLC0415
-
-    return zlib.crc32(tok.encode("utf-8"))
-
-
-def embed_tokens_np(texts: "pd.Series | list[str]", dim: int = 64) -> np.ndarray:
+def embed_tokens_np(texts: "Sequence[str]", dim: int = 64) -> np.ndarray:
     """Hashed bag-of-tokens embedding, L2-normalized. (n, dim) float32.
 
     token → bucket h % dim with sign from bit 31 (feature-hashing trick).
@@ -105,7 +105,7 @@ def embed_tokens_np(texts: "pd.Series | list[str]", dim: int = 64) -> np.ndarray
     return out.astype(np.float32)
 
 
-def _embed_tokens_np_loop(texts: "pd.Series | list[str]", dim: int = 64) -> np.ndarray:
+def _embed_tokens_np_loop(texts: "Sequence[str]", dim: int = 64) -> np.ndarray:
     """Reference implementation (per-token crc32 through map()); the Arrow
     fast path must match it bit-for-bit (tests/test_kernels.py)."""
     import zlib  # noqa: PLC0415
@@ -157,46 +157,7 @@ def hashed_bow_expr(text_col, dim: int = 32):
     ).otherwise(F.transform(acc, lambda v: v.cast("float")))
 
 
-def embed_text_hybrid(text_col, dim: int = 32):
-    """Fastest embedding path: token hashing stays JVM-side
-    (split + xxhash64 inside an O(tokens) transform — cheap even though HOF
-    lambdas are interpreted), and Python receives only array<long> hashes
-    for a pure-numpy scatter-add. No strings cross the Arrow boundary.
-
-    Same feature-hashing semantics as embed_text_udf but a different hash
-    function (xxhash64 vs crc32), so vectors differ between the two kernels;
-    each is self-consistent and deterministic.
-
-    Measured (6.2M rows, dim=32, local[32]): 5.7s vs 4.2s for the Arrow
-    kernel — the interpreted split+xxhash64 HOF costs more than shipping
-    strings to Python saves. embed_text_udf remains the default hot path;
-    this variant wins only when Python workers are the constrained
-    resource."""
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    hs = F.transform(
-        F.filter(F.split(F.coalesce(c, F.lit("")), r"\s+"), lambda t: t != ""),
-        lambda t: F.xxhash64(t),
-    )
-
-    @F.pandas_udf(T.ArrayType(T.FloatType()))
-    def scatter(hcol: pd.Series) -> pd.Series:
-        n = len(hcol)
-        out = np.zeros((n, dim), dtype=np.float64)
-        if n:
-            counts = np.fromiter((len(v) for v in hcol), dtype=np.int64, count=n)
-            if counts.sum():
-                row_ids = np.repeat(np.arange(n), counts)
-                flat = np.concatenate([np.asarray(v, dtype=np.int64) for v in hcol if len(v)])
-                _scatter_signs(out, row_ids, np.mod(flat, dim),
-                               np.where(flat >= 0, 1.0, -1.0))
-        norms = np.linalg.norm(out, axis=1, keepdims=True)
-        np.divide(out, norms, out=out, where=norms > 0)
-        return pd.Series(list(out.astype(np.float32)))
-
-    return scatter(hs)
-
-
-def embed_tokens_md5_np(texts: "pd.Series | list[str]", dim: int = 32) -> np.ndarray:
+def embed_tokens_md5_np(texts: "Sequence[str]", dim: int = 32) -> np.ndarray:
     """Oracle-parity hashed bag-of-tokens embedding, L2-normalized, float64.
 
     Same feature-hashing semantics as embed_tokens_np but with a token hash
@@ -241,7 +202,7 @@ def _split_hash_scatter(arr, dim: int, hash_unique) -> np.ndarray:
     once per UNIQUE token (Zipfian win), scatter ±1 signs, L2-normalize.
     ``hash_unique(list[str]) -> (np.int64 hashes, np.float64 signs,
     np.int64 buckets)`` supplies the hash family. Returns (n, dim)
-    float64 — identical math to the pandas-era kernels."""
+    float64."""
     import pyarrow.compute as pc  # noqa: PLC0415
 
     if isinstance(arr, pa.ChunkedArray):  # dictionary_encode needs one chunk
@@ -289,14 +250,64 @@ def _md5_unique(tokens: list, dim: int):
             np.where((hs >> 59) & 1 == 0, 1.0, -1.0))
 
 
-def _mat_to_list_array(mat: np.ndarray, pa_type):
-    """(n, dim) matrix → pyarrow list array ZERO-COPY: one flat values
-    buffer + an arithmetic offsets array — no per-row Python objects
-    (the pd.Series(list(mat)) return path walked every row)."""
-    n, dim = mat.shape
-    values = pa.array(mat.ravel(), type=pa_type)
-    offsets = pa.array(np.arange(0, (n + 1) * dim, dim, dtype=np.int32))
-    return pa.ListArray.from_arrays(offsets, values)
+# ---------------------------------------------------------------------------
+# Arrow list layout <-> numpy: the read and write halves every batch
+# kernel shares (flat buffers and offsets, never per-row Python objects)
+
+def _list_array_parts(arr) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Arrow list array of n rows → (flat values, (n+1,) int64 offsets
+    into them, (n,) bool validity). Built on the array's OWN offsets, so
+    a sliced batch (non-zero ``offset``) and null rows backed by
+    non-empty sub-lists read correctly — ``ListArray.values`` ignores
+    both. Null elements become NaN, as ``np.asarray(rows, float64)``
+    makes them."""
+    offsets = np.asarray(arr.offsets, dtype=np.int64)
+    lo = int(offsets[0])
+    flat = arr.values.slice(lo, int(offsets[-1]) - lo).to_numpy(
+        zero_copy_only=False)
+    return flat, offsets - lo, np.asarray(arr.is_valid(), dtype=bool)
+
+
+def _list_array_to_matrix(arr, who: str) -> tuple[np.ndarray, np.ndarray]:
+    """Arrow list array of n vectors → ((k, dim) float64 matrix of its k
+    non-null rows, (n,) bool validity). Non-null rows of unequal width
+    raise ValueError naming the kernel ``who``."""
+    flat, offsets, valid = _list_array_parts(arr)
+    starts, widths = offsets[:-1][valid], np.diff(offsets)[valid]
+    if len(widths) and (widths != widths[0]).any():
+        raise ValueError(f"{who}: vectors in one batch must share one "
+                         f"width, got widths {sorted(set(widths.tolist()))}")
+    dim = int(widths[0]) if len(widths) else 0
+    mat = flat[starts[:, None] + np.arange(dim)]
+    return mat.astype(np.float64, copy=False), valid
+
+
+def _row_offsets(valid: np.ndarray, width: int) -> np.ndarray:
+    """(n+1,) offsets of n rows that hold ``width`` values each when
+    valid and none when null."""
+    return np.concatenate(([0], np.cumsum(valid * width)))
+
+
+def _list_array(offsets: np.ndarray, values: pa.Array,
+                valid: "np.ndarray | None" = None) -> pa.ListArray:
+    """Flat ``values`` + (n+1,) offsets → list array; rows where
+    ``valid`` is False are null."""
+    mask = None if valid is None or valid.all() else pa.array(~valid)
+    return pa.ListArray.from_arrays(pa.array(offsets, type=pa.int32()),
+                                    values, mask=mask)
+
+
+def _mat_to_list_array(mat: np.ndarray, pa_type,
+                       valid: "np.ndarray | None" = None) -> pa.ListArray:
+    """(k, dim) matrix → pyarrow list array ZERO-COPY: one flat values
+    buffer + arithmetic offsets — no per-row Python objects. ``valid``
+    ((n,) bool with k True) spreads the k rows over n slots and makes
+    the rest null; without it every row is valid."""
+    k, dim = mat.shape
+    if valid is None:
+        valid = np.ones(k, dtype=bool)
+    return _list_array(_row_offsets(valid, dim),
+                       pa.array(mat.ravel(), type=pa_type), valid)
 
 
 def embed_text_parity_udf(dim: int = 32):
@@ -306,9 +317,8 @@ def embed_text_parity_udf(dim: int = 32):
     Arrow fast path: C++ tokenize, md5 once per UNIQUE token
     (dictionary-encoded — the crc32 kernel's Zipfian win, newly applied
     to the parity hash), zero-copy list return."""
-    from pyspark.sql.functions import arrow_udf  # noqa: PLC0415
 
-    @arrow_udf(T.ArrayType(T.DoubleType()))
+    @F.arrow_udf(T.ArrayType(T.DoubleType()))
     def embed(texts: pa.Array) -> pa.Array:
         mat = _split_hash_scatter(texts, dim, _md5_unique)
         return _mat_to_list_array(mat, pa.float64())
@@ -321,11 +331,10 @@ def embed_text_udf(dim: int = 64):
     strings never materialize as Python/pandas objects (pa.Array in),
     and the result is one flat float buffer + offsets out — measured
     ~1.9 s → ~1.2 s for the flagship's 6.17M-turn embed stage vs the
-    pandas_udf return path. Bit-identical to embed_tokens_np
+    per-row pandas return path. Bit-identical to embed_tokens_np
     (differential-tested)."""
-    from pyspark.sql.functions import arrow_udf  # noqa: PLC0415
 
-    @arrow_udf(T.ArrayType(T.FloatType()))
+    @F.arrow_udf(T.ArrayType(T.FloatType()))
     def embed(texts: pa.Array) -> pa.Array:
         mat = _split_hash_scatter(texts, dim, _crc32_unique)
         return _mat_to_list_array(mat.astype(np.float32), pa.float32())
@@ -353,32 +362,26 @@ def centroid_cells_kernel(cmat: np.ndarray, cids: np.ndarray, n: int, id_type):
     out_t = T.ArrayType(T.StructType([
         T.StructField("d", T.DoubleType()), T.StructField("c", id_type)]))
 
-    @F.pandas_udf(out_t)
-    def cells(vecs: pd.Series) -> pd.Series:
-        if not len(vecs):
-            return pd.Series([], dtype=object)
-        vals = vecs.tolist()
-        mask = [v is not None for v in vals]
-        out = [None] * len(vals)
-        if any(mask):
-            m = np.asarray([v for v in vals if v is not None], dtype=np.float64)
-            norms = np.linalg.norm(m, axis=1, keepdims=True)
-            zero = norms[:, 0] == 0
-            m = m / np.maximum(norms, 1e-300)
-            # half-away-from-zero like F.round/DuckDB ROUND (scan_topk note)
-            raw = m @ cn.T
-            cos = np.copysign(np.floor(np.abs(raw) * 1e6 + 0.5) / 1e6, raw)
-            cos[zero] = 0.0  # cosine_expr's zero-norm convention
-            top = np.argsort(-cos, axis=1, kind="stable")[:, :n]
-            rows = [
-                [{"d": float(1.0 - cos[i, j]), "c": cids[j].item()
-                  if hasattr(cids[j], "item") else cids[j]}
-                 for j in top[i]]
-                for i in range(len(m))
-            ]
-            it = iter(rows)
-            out = [next(it) if ok else None for ok in mask]
-        return pd.Series(out)
+    out_pa, c_type = to_arrow_type(out_t), to_arrow_type(id_type)
+
+    @F.arrow_udf(out_t)
+    def cells(vecs: pa.Array) -> pa.Array:
+        m, valid = _list_array_to_matrix(vecs, "centroid_cells_kernel")
+        if not len(m):  # NULL vectors get no cells
+            return pa.nulls(len(valid), out_pa)
+        norms = np.linalg.norm(m, axis=1, keepdims=True)
+        zero = norms[:, 0] == 0
+        m = m / np.maximum(norms, 1e-300)
+        # half-away-from-zero like F.round/DuckDB ROUND (scan_topk note)
+        raw = m @ cn.T
+        cos = np.copysign(np.floor(np.abs(raw) * 1e6 + 0.5) / 1e6, raw)
+        cos[zero] = 0.0  # cosine_expr's zero-norm convention
+        top = np.argsort(-cos, axis=1, kind="stable")[:, :n]
+        d = 1.0 - np.take_along_axis(cos, top, axis=1)
+        structs = pa.StructArray.from_arrays(
+            [pa.array(d.ravel()), pa.array(cids[top].ravel(), type=c_type)],
+            names=["d", "c"])
+        return _list_array(_row_offsets(valid, top.shape[1]), structs, valid)
 
     return cells
 
@@ -391,61 +394,38 @@ def hyperplane_bucket_kernel(bank_T: np.ndarray, tables: int, block_planes: int)
     (Spark's array HOF lambdas are interpreted, ~15× slower per plane)."""
     weights = 1 << np.arange(block_planes, dtype=np.int64)
 
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def buckets(vecs: pd.Series) -> pd.Series:
-        if not len(vecs):  # empty Arrow batch: asarray([]) would be 1-D
-            return pd.Series([], dtype=object)
-        vals = vecs.tolist()
+    @F.arrow_udf(T.ArrayType(T.LongType()))
+    def buckets(vecs: pa.Array) -> pa.Array:
         # NULL vectors → NULL bucket arrays (posexplode emits no rows),
         # matching the expr path where a null array yields a null bucket
         # that joins nothing — instead of crashing the whole batch
-        mask = [v is not None for v in vals]
-        out = [None] * len(vals)
-        if any(mask):
-            m = np.asarray([v for v in vals if v is not None], dtype=np.float64)
-            bits = (m @ bank_T > 0).astype(np.int64)
-            packed = bits.reshape(len(m), tables, block_planes) @ weights
-            it = iter(packed)
-            out = [next(it) if ok else None for ok in mask]
-        return pd.Series(out)
+        m, valid = _list_array_to_matrix(vecs, "hyperplane_bucket_kernel")
+        if not len(m):
+            return pa.nulls(len(valid), pa.list_(pa.int64()))
+        bits = (m @ bank_T > 0).astype(np.int64)
+        packed = bits.reshape(len(m), tables, block_planes) @ weights
+        return _mat_to_list_array(packed, pa.int64(), valid)
 
     return buckets
 
 
-@F.pandas_udf(T.ArrayType(T.FloatType()))
-def np_normalize(vecs: pd.Series) -> pd.Series:
-    """L2-normalize an array<float> column (Arrow-batched). Uniform-width
-    batches (the normal embedding case) take ONE (n, d) matrix normalize;
-    ragged batches fall back to a per-element loop."""
-    vals = vecs.tolist()
-    widths = {len(v) for v in vals if v is not None}
-    if len(widths) == 1 and not any(v is None for v in vals):
-        m = np.asarray(vals, dtype=np.float32)
+@F.arrow_udf(T.ArrayType(T.FloatType()))
+def np_normalize(vecs: pa.Array) -> pa.Array:
+    """L2-normalize an array<float> column (Arrow-batched, float32). ONE
+    path for every batch: the non-null rows are grouped by width and each
+    group takes the (k, w) matrix normalize ``m / ‖m‖``. A row's norm
+    does not depend on the other rows of its group, so a vector gets the
+    same bits whichever rows share its Arrow batch. Zero and empty
+    vectors pass through unchanged; NULL rows stay NULL."""
+    flat, offsets, valid = _list_array_parts(vecs)
+    out = flat.astype(np.float32)
+    starts, widths = offsets[:-1], np.diff(offsets)
+    for w in np.unique(widths[valid]):
+        idx = starts[valid & (widths == w)][:, None] + np.arange(w)
+        m = out[idx]
         n = np.linalg.norm(m, axis=1, keepdims=True)
-        out = m / np.where(n > 0, n, 1.0)
-        return pd.Series(list(out))
-
-    # ragged/null batch: ONE flat concatenate + segmented sum-of-squares via
-    # np.add.reduceat — vectorized like the uniform path (the round-3
-    # per-element numpy loop was the last per-element kernel path, VERDICT
-    # ask #7). Nulls and zero-length vectors pass through unchanged
-    # (reduceat mis-handles zero-length segments, so empties are excluded
-    # from the flat pass rather than special-cased inside it).
-    nn = [np.asarray(v, dtype=np.float32) for v in vals
-          if v is not None and len(v)]
-    if not nn:
-        return pd.Series(vals)
-    lens = np.fromiter((len(a) for a in nn), dtype=np.int64, count=len(nn))
-    flat = np.concatenate(nn)
-    bounds = np.cumsum(lens)
-    seg_sq = np.add.reduceat(flat * flat, np.concatenate(([0], bounds[:-1])))
-    norms = np.sqrt(seg_sq)
-    scale = np.where(norms > 0, norms, 1.0).astype(np.float32)
-    pieces = np.split(flat / np.repeat(scale, lens), bounds[:-1])
-    it = iter(pieces)
-    return pd.Series([
-        v if v is None or not len(v) else next(it) for v in vals
-    ])
+        out[idx] = m / np.where(n > 0, n, 1.0)
+    return _list_array(offsets, pa.array(out, type=pa.float32()), valid)
 
 
 def norm_expr(a):
@@ -533,7 +513,7 @@ def _row_shingles(text: str, n: int) -> list[str]:
 
 
 def minhash_sig_np(
-    texts: "pd.Series | list[str]", num_hashes: int = 32, n: int = 3,
+    texts: "Sequence[str]", num_hashes: int = 32, n: int = 3,
     hash: str = "md5", seed: int = 11,
 ) -> np.ndarray:
     """(len(texts), num_hashes) int64 MinHash signatures: base hash per
@@ -574,10 +554,11 @@ def minhash_sig_udf(num_hashes: int = 32, n: int = 3, hash: str = "md5",
     explode+groupBy batch equivalent of the same idea with a different
     hash family)."""
 
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def sig(texts: pd.Series) -> pd.Series:
-        mat = minhash_sig_np(texts.tolist(), num_hashes, n, hash, seed)
-        return pd.Series(list(mat))
+    @F.arrow_udf(T.ArrayType(T.LongType()))
+    def sig(texts: pa.Array) -> pa.Array:
+        # to_pylist: iterating a StringArray yields Arrow scalars, not str
+        mat = minhash_sig_np(texts.to_pylist(), num_hashes, n, hash, seed)
+        return _mat_to_list_array(mat, pa.int64())
 
     return sig
 
@@ -596,24 +577,18 @@ def pq_codes_kernel(cbs: "list[np.ndarray]", ds: int):
     mats = [np.asarray(cb, dtype=np.float64) for cb in cbs]
     halves = [0.5 * (mat * mat).sum(axis=1) for mat in mats]
 
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def codes(vecs: pd.Series) -> pd.Series:
-        if not len(vecs):
-            return pd.Series([], dtype=object)
-        vals = vecs.tolist()
-        mask = [v is not None for v in vals]
-        out = [None] * len(vals)
-        if any(mask):
-            x = np.asarray([v for v in vals if v is not None], dtype=np.float64)
-            per_j = []
-            for j in range(m):
-                raw = x[:, j * ds:(j + 1) * ds] @ mats[j].T - halves[j]
-                # half-away-from-zero like F.round/DuckDB ROUND
-                key = np.copysign(np.floor(np.abs(raw) * 1e6 + 0.5) / 1e6, raw)
-                per_j.append(np.argmax(key, axis=1) + 1)  # codes are 1-based
-            rows = np.stack(per_j, axis=1).astype(np.int32)
-            it = iter(rows)
-            out = [[int(c) for c in next(it)] if ok else None for ok in mask]
-        return pd.Series(out)
+    @F.arrow_udf(T.ArrayType(T.IntegerType()))
+    def codes(vecs: pa.Array) -> pa.Array:
+        x, valid = _list_array_to_matrix(vecs, "pq_codes_kernel")
+        if not len(x):
+            return pa.nulls(len(valid), pa.list_(pa.int32()))
+        per_j = []
+        for j in range(m):
+            raw = x[:, j * ds:(j + 1) * ds] @ mats[j].T - halves[j]
+            # half-away-from-zero like F.round/DuckDB ROUND
+            key = np.copysign(np.floor(np.abs(raw) * 1e6 + 0.5) / 1e6, raw)
+            per_j.append(np.argmax(key, axis=1) + 1)  # codes are 1-based
+        rows = np.stack(per_j, axis=1).astype(np.int32)
+        return _mat_to_list_array(rows, pa.int32(), valid)
 
     return codes
