@@ -534,8 +534,8 @@ def main() -> None:
     # TAIL, which in r04 cut the front of the (single) JSON line and with
     # it the headline metric. Emit a second, compact line AFTER the full
     # one — whatever suffix the driver keeps always parses and carries the
-    # flagship number plus the ten heaviest queries.
-    top10 = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:10])
+    # flagship number plus EVERY query's timing (a ten-slowest excerpt
+    # left a whole round's per-query rows unmeasurable).
     print(
         json.dumps(
             {
@@ -546,8 +546,8 @@ def main() -> None:
                 "cpus": cpus,
                 "n_turns": n_turns,
                 "total_sec": total,
-                "queries": top10,
-                "note": "compact tail line (full per-query map on the previous line)",
+                "queries": timings,
+                "note": "compact tail line: headline + full per-query map",
             }
         )
     )

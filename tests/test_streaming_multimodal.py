@@ -688,3 +688,26 @@ def test_stream_asof_static_snapshot_cap(spark, corpus_df):
     small = ctx.limit(5)
     assert stream_asof_static(
         corpus_df, small, max_snapshot_rows=5).count() == corpus_df.count()
+
+
+def test_stream_asof_static_evaluates_ctx_once(spark, corpus_df):
+    """The size guard and the snapshot are ONE bounded action on ctx: an
+    expensive ctx (here a counting Python UDF) runs once per row, not
+    once for the guard and again for the snapshot."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from towhee_spark.streaming.ops import stream_asof_static
+
+    n = corpus_df.count()
+    calls = spark.sparkContext.accumulator(0)
+
+    def keep(_conv_id):
+        calls.add(1)
+        return True
+
+    ctx = corpus_df.where(F.udf(keep, T.BooleanType())("conv_id")).select(
+        "conv_id", "ts", F.length("text").cast("double").alias("ctx_score"))
+    out = stream_asof_static(corpus_df, ctx)
+    assert calls.value == n
+    assert out.count() == n

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from towhee_spark.functions.similarity import _ivf_cells_of, ivf_train
+from towhee_spark.layout import collect_small
 
 
 def _rebuild_cents(
@@ -221,9 +222,8 @@ def kmeans_train(
     Returns [(cid, [double]*dim), ...] cid-ascending; feed to
     kmeans_assign / ivf_topk(centroids=) to cluster once and reuse.
 
-    Vector tables with ≤ ``collect_vectors`` rows (limit cap+1 probe —
-    the bpe_train / connected_components convention) collect ONCE and
-    the Lloyd loop replays driver-side (:func:`_kmeans_train_local` —
+    Vector tables with ≤ ``collect_vectors`` rows (layout.collect_small)
+    collect ONCE and the Lloyd loop replays driver-side (:func:`_kmeans_train_local` —
     bit-exact replica of the impl="expr" iteration; pytest pins
     local == distributed). Each distributed round was 2 jobs of pure
     latency on a 2k-row gate table — measured 1.50 s → 0.17 s for the
@@ -247,8 +247,8 @@ def kmeans_train(
     )
     cents: list[tuple] | None = None
     if iters > 0:
-        head = e.limit(collect_vectors + 1).collect()
-        if len(head) <= collect_vectors:
+        head = collect_small(e, collect_vectors)
+        if head is not None:
             cents = _ivf_sample_local(
                 [(r["__id"], r["__v"]) for r in head], k,
                 index.schema[i_id].dataType)

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from towhee_spark.functions.text import normalize_text
+from towhee_spark.layout import collect_small
 
 
 def _with_cached_deps(out: DataFrame, *deps: DataFrame) -> DataFrame:
@@ -781,8 +782,8 @@ def connected_components(
     ``component`` = the minimum node id in its component. Join back to the
     corpus (see :func:`dedup_groups`) to pick up singletons.
 
-    An edge set of ≤ ``collect_edges`` rows (the bpe_train threshold
-    convention; 1M edges = 16 MB of longs) is collected ONCE and solved
+    An edge set of ≤ ``collect_edges`` rows (layout.collect_small; 1M
+    edges = 16 MB of longs) is collected ONCE and solved
     with driver-side union-find — the same (id, min-of-component) output
     by definition, pytest-pinned against the star loop — because each
     distributed round costs 2 grouped aggregates + a distinct + a
@@ -814,13 +815,11 @@ def connected_components(
         )
         .distinct()
     )
-    if collect_edges and collect_edges > 0:
-        head = edge_plan.limit(collect_edges + 1).collect()
-        if len(head) <= collect_edges:
-            return pairs.sparkSession.createDataFrame(
-                _cc_local([(r["u"], r["v"]) for r in head]) or
-                [],  # createDataFrame needs the schema below for empty
-                "id long, component long")
+    head = collect_small(edge_plan, collect_edges)
+    if head is not None:
+        return pairs.sparkSession.createDataFrame(
+            _cc_local([(r["u"], r["v"]) for r in head]),
+            "id long, component long")  # the schema types an empty result
     edges = edge_plan.localCheckpoint()
     prev = _star_fingerprint(edges)
     if prev[0] == 0:

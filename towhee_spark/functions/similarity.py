@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from towhee_spark.kernels import cosine_with_norms_expr, norm_expr  # noqa: F401
+from towhee_spark.layout import collect_small
 
 
 def brute_force_topk(
@@ -132,22 +133,20 @@ def scan_topk(
     ``max_queries`` (default 100k) guards the driver collect: a query set
     past the cap raises loudly instead of OOMing the driver — route big
     query sets through ``brute_force_topk`` (fully shuffled, no driver
-    materialization) or an ANN tier, or raise the cap explicitly."""
+    materialization) or an ANN tier, or raise the cap (layout.collect_small)."""
     import pandas as pd  # noqa: PLC0415
 
-    # limit(cap+1) bounds the collect itself — the guard never materializes
-    # more than one row past the cap even when the input is huge
-    qrows = (queries.select(F.col(q_id).alias("qid"), F.col(q_vec).alias("qv"))
-             .limit(max_queries + 1).collect())
-    if not qrows:
-        raise ValueError("scan_topk: empty query set")
-    if len(qrows) > max_queries:
+    qrows = collect_small(queries.select(
+        F.col(q_id).alias("qid"), F.col(q_vec).alias("qv")), max_queries)
+    if qrows is None:
         raise ValueError(
             f"scan_topk: query set exceeds max_queries={max_queries} — the "
             f"query matrix is collected to the driver. Use brute_force_topk "
             f"(shuffled, no driver materialization) or an ANN tier "
             f"(lsh/ivf/pq/ivfpq/ivfsq_topk) for large query sets, or raise "
             f"max_queries= if it truly fits driver memory")
+    if not qrows:
+        raise ValueError("scan_topk: empty query set")
     q_ids = np.array([r["qid"] for r in qrows])
     qm = np.array([r["qv"] for r in qrows], dtype=np.float64)
     qm /= np.maximum(np.linalg.norm(qm, axis=1, keepdims=True), 1e-300)

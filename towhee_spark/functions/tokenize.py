@@ -53,6 +53,8 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from towhee_spark.layout import collect_small
+
 UNK = "[UNK]"
 
 # Java-regex-parity normalizer (the arrow kernel's Python face of
@@ -92,18 +94,18 @@ def wordpiece_vocab(
     floats anywhere. Returns a sorted de-duplicated list[str].
 
     Train cost: ONE distinct-word count aggregate; when that table fits
-    ``collect_words`` rows (the bpe_train threshold convention) both
-    rankings are derived driver-side from it — integer counts, the same
-    (c DESC, key ASC) total orders, ASCII-safe compares — instead of two
-    separate corpus jobs (measured 0.83 s → 0.45 s per train at sf0.1,
-    re-paid by every *_full bench row that retrains at plan build)."""
+    ``collect_words`` rows (layout.collect_small) both rankings are
+    derived driver-side from it — integer counts, the same (c DESC, key
+    ASC) total orders, ASCII-safe compares — instead of two separate
+    corpus jobs (measured 0.83 s → 0.45 s per train at sf0.1, re-paid by
+    every *_full bench row that retrains at plan build)."""
     from towhee_spark.functions.ranking import _toks  # noqa: PLC0415
 
     w = docs.select(
         F.explode(_toks(F.col(text_col))).alias("word"))
-    wc = (w.groupBy("word").agg(F.count(F.lit(1)).alias("c"))
-          .limit(collect_words + 1).collect())
-    if len(wc) <= collect_words:
+    wc = collect_small(
+        w.groupBy("word").agg(F.count(F.lit(1)).alias("c")), collect_words)
+    if wc is not None:
         counts = [(r["word"], int(r["c"])) for r in wc]
         # occurrence-weighted top words, '##'-prefixed corpus words
         # excluded BEFORE the top-N (ambiguous with continuation pieces)
@@ -375,8 +377,8 @@ def bpe_train(
 
     The loop state is the DISTINCT-WORD table (word, cnt, packed symbol
     string). When it has ≤ ``collect_words`` rows it is collected ONCE
-    and the whole train loop runs driver-side in Python — a train-step
-    action (the wordpiece_vocab / kmeans_train convention) with zero
+    (layout.collect_small) and the whole train loop runs driver-side in
+    Python — a train-step action with zero
     per-round Spark jobs; Python's str.replace is the same
     non-overlapping left-to-right scan as the engine's replace(), and
     pair counts / (count DESC, pair ASC) ties are exact integers and
@@ -414,10 +416,8 @@ def bpe_train(
     w = base
     prev_ckpt = None
     try:
-        # limit(cap+1) bounds the probe collect (the scan_topk guard):
-        # a small table trains driver-side, a big one distributed
-        head = w.select("cnt", "s").limit(collect_words + 1).collect()
-        if len(head) <= collect_words:
+        head = collect_small(w.select("cnt", "s"), collect_words)
+        if head is not None:
             return _bpe_train_local(
                 [(int(r["cnt"]), r["s"]) for r in head], n_merges)
         merges: list[tuple[str, str]] = []

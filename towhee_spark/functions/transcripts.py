@@ -22,6 +22,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from towhee_spark.layout import collect_small
 from towhee_spark.temporal import epoch_us, sessionize
 
 
@@ -754,14 +755,13 @@ def tree_paths(
     ``truncate_lineage=False`` keeps the fully declarative exponential
     plan — only sane for small ``max_depth`` (tests, plan inspection).
 
-    ``collect_nodes``: node tables within the cap (limit cap+1 probe)
+    ``collect_nodes``: node tables within the cap (layout.collect_small)
     collect once and the walk runs driver-side (_tree_paths_local —
-    definitionally identical, pytest lockstep pin; the CC/bpe_train
-    threshold convention): the doubling rounds' checkpoint jobs are
-    pure latency on a small tree. Measured crossover (local[32]): 3×
-    faster at 9k nodes (0.39 vs 1.21 s), mildly slower at 93k (2.7 vs
-    2.2 s) — the 30k default sits inside the winning regime. 0 disables
-    (always distributed).
+    definitionally identical, pytest lockstep pin): the doubling rounds'
+    checkpoint jobs are pure latency on a small tree. Measured crossover
+    (local[32]): 3× faster at 9k nodes (0.39 vs 1.21 s), mildly slower at
+    93k (2.7 vs 2.2 s) — the 30k default sits inside the winning regime.
+    0 disables (always distributed).
     """
     import math  # noqa: PLC0415
 
@@ -769,25 +769,14 @@ def tree_paths(
         raise ValueError("tree_paths: max_depth must be >= 1")
     rounds = max(1, math.ceil(math.log2(max_depth + 1)))
 
-    if collect_nodes:
-        # driver-local fast path (the connected_components / bpe_train
-        # threshold convention): node tables within the cap collect once
-        # and the walk runs in Python — 7 checkpoint-scheduled doubling
-        # rounds are pure job latency on a small tree. limit(cap+1)
-        # bounds the probe itself; the walk replicates the distributed
-        # semantics EXACTLY (pytest lockstep pin): stop at a NULL or
-        # DANGLING parent (the self-join miss), fail iff a node has
-        # >= 2^rounds existing ancestors (the post-rounds live-pointer
-        # guard — the same threshold assert_true enforces), leaves =
-        # nodes never referenced as a parent.
-        probe = df.select(
-            F.col(conv).alias("__c"), F.col(id_col).alias("__id"),
-            F.col(parent_col).alias("__ptr"),
-        ).limit(collect_nodes + 1).collect()
-        if len(probe) <= collect_nodes:
-            return _tree_paths_local(
-                df, probe, conv, id_col, parent_col, max_depth,
-                1 << rounds, leaves_only)
+    probe = collect_small(df.select(
+        F.col(conv).alias("__c"), F.col(id_col).alias("__id"),
+        F.col(parent_col).alias("__ptr"),
+    ), collect_nodes)
+    if probe is not None:
+        return _tree_paths_local(
+            df, probe, conv, id_col, parent_col, max_depth,
+            1 << rounds, leaves_only)
 
     st = df.select(
         F.col(conv).alias("__c"),

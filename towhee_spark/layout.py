@@ -15,9 +15,15 @@ salt-safe (pure per-row kernels, partial aggregation).
 from __future__ import annotations
 
 from collections.abc import Sequence
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+if TYPE_CHECKING:
+    import pandas
+
+    from pyspark.sql import Row
 
 
 def repartition_by_key(
@@ -62,6 +68,29 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     if df.rdd.getNumPartitions() < par:
         return df.repartition(par)
     return df
+
+
+def collect_small(
+    df: DataFrame, max_rows: int, *, to_pandas: bool = False
+) -> list[Row] | pandas.DataFrame | None:
+    """The one small-input gate: ``df``'s rows on the driver if it has at
+    most ``max_rows``, else ``None``. Train/solve operators solve a small
+    input driver-side and fall back distributed on ``None``; the
+    driver-snapshot guards (scan_topk, stream_asof_static) raise on it.
+
+    ``max_rows <= 0`` runs NO job and returns ``None``. Otherwise ONE
+    bounded action: ``limit(max_rows + 1)`` — the extra row tells "at the
+    cap" from "past it" without collecting more — then ``collect()``, or
+    ``toPandas()`` with ``to_pandas`` (Arrow→pandas types; ``collect()``
+    makes timestamps driver-local-time datetimes). An empty input returns
+    an empty result, not ``None``. The count is exact on purpose: a
+    Catalyst estimate (``optimizedPlan.stats``) is no gate — without CBO
+    join estimates multiply (6.0e31 bytes for a 407-row edge plan)."""
+    if max_rows <= 0:
+        return None
+    head = df.limit(max_rows + 1)
+    rows = head.toPandas() if to_pandas else head.collect()
+    return rows if len(rows) <= max_rows else None
 
 
 def hot_keys(

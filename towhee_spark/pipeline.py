@@ -60,7 +60,7 @@ from __future__ import annotations
 
 import copy
 from collections.abc import Callable, Sequence
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Any
 
 import pandas as pd
@@ -925,8 +925,6 @@ def _compile_time_window(df: DataFrame, node: _Node, ctx: _Ctx) -> DataFrame:
     size, step, ts_col = node.params["size"], node.params["step"], node.params["ts"]
     exact = node.params.get("exact", True)
     emit_start = node.params.get("emit_start")
-    in_cols, out_cols, fn = list(node.in_cols), list(node.out_cols), node.fn
-    fields = _out_fields(node.out_cols, node.params.get("out_types"))
     keys = _group_cols(df, ctx.by)
     is_ts = dict(df.dtypes)[ts_col].startswith("timestamp")
     # epoch_us handles TIMESTAMP_NTZ scans session-tz-independently
@@ -1060,47 +1058,23 @@ def _compile_time_window(df: DataFrame, node: _Node, ctx: _Ctx) -> DataFrame:
                 .withColumn("__base_evt", base_evt)
                 .withColumn("__B", run_base)
             )
-        lo_e = F.greatest(lo, (F.col("__B") / step_ms).cast("long"))
-        wids = F.when(lo_e <= hi, F.sequence(lo_e, hi)).otherwise(
-            F.array().cast("array<long>")
-        )
-        df2 = (
-            src.withColumn("__twid", F.explode(wids))
-            .withColumn("__wstart", F.col("__twid") * F.lit(step))
-            .drop("__twid", "__ms", "__base_evt", "__B")
-        )
+        lo = F.greatest(lo, (F.col("__B") / step_ms).cast("long"))
     else:
         # Scale path: ALL non-empty step-aligned windows (Spark F.window
         # semantics) — skips the per-key lag/base pass; coincides with exact
         # whenever no realignment fires (gap-free streams).
-        wids = F.when(lo <= hi, F.sequence(lo, hi)).otherwise(
-            F.array().cast("array<long>")
-        )
-        df2 = (
-            df.withColumn("__twid", F.explode(wids))
-            .withColumn("__wstart", F.col("__twid") * F.lit(step))
-            .drop("__twid")
-        )
-
-    res = None
-    if not ctx.compat:
-        res = _native_agg(df2, node, [*keys, "__wstart"])
-    if res is None:
-        schema = T.StructType(
-            [df2.schema[k] for k in keys]
-            + [T.StructField("__wstart", T.LongType())]
-            + fields
-        )
-        names = [f.name for f in schema.fields]
-
-        def run(key, pdf):
-            pdf = pdf.sort_values(ts_col, kind="mergesort")
-            r = fn(*[_nonmissing(pdf[c]) for c in in_cols])
-            r = r if isinstance(r, tuple) else (r,)
-            d = dict(zip(names, list(key) + list(r)))
-            return pd.DataFrame([d], columns=names)
-
-        res = df2.groupBy(*keys, "__wstart").applyInPandas(run, schema=schema)
+        src = df
+    wids = F.when(lo <= hi, F.sequence(lo, hi)).otherwise(
+        F.array().cast("array<long>")
+    )
+    df2 = (
+        src.withColumn("__twid", F.explode(wids))
+        .withColumn("__wstart", F.col("__twid") * F.lit(step))
+        .drop("__twid", "__ms", "__base_evt", "__B")
+    )
+    # each window folds in (timestamp_col, *declared order) order
+    tw_ctx = replace(ctx, order=tuple(dict.fromkeys((ts_col, *ctx.order))))
+    res = _apply_grouped(df, node, tw_ctx, lambda *_: (df2, ["__wstart"]), [])
     if exact:
         # per-key window ordinal (the exact path's historical row order)
         ow = (

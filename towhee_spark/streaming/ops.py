@@ -14,6 +14,8 @@ from collections.abc import Mapping
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from towhee_spark.layout import collect_small
+
 
 def with_watermark(df: DataFrame, ts: str = "ts", delay: str = "10 minutes") -> DataFrame:
     """Late-data bound; required before stateful event-time aggs in streams."""
@@ -137,7 +139,8 @@ def stream_asof_static(
     ``ctx`` bigger than the cap raises loudly instead of OOMing the
     driver — point a big, changing right side at the stateful buffered
     asof in ``towhee_spark.streaming.stateful`` instead, or raise the cap
-    explicitly if the snapshot genuinely fits driver memory.
+    explicitly if the snapshot genuinely fits driver memory. Guard and
+    snapshot are one bounded action (layout.collect_small).
     """
     import pandas as pd  # noqa: PLC0415
 
@@ -159,19 +162,16 @@ def stream_asof_static(
         )
 
     # plan-time snapshot: dedupe ties with the batch asof's direction rule
-    # (payload-lexicographic max for backward, min for forward).
-    # Size guard first — limit(cap+1).count() is a cheap bounded action
-    # (scans stop once cap+1 rows surface), vs toPandas() on an oversized
-    # ctx which is a driver OOM with no error message.
-    probe = ctx.select(on).limit(max_snapshot_rows + 1).count()
-    if probe > max_snapshot_rows:
+    # (payload-lexicographic max for backward, min for forward)
+    snap = collect_small(
+        ctx.select(on, ts, *vcols), max_snapshot_rows, to_pandas=True)
+    if snap is None:
         raise ValueError(
             f"stream_asof_static: ctx exceeds max_snapshot_rows="
             f"{max_snapshot_rows} — the snapshot ships in the task closure "
             f"and must be dimension-sized. Use the stateful buffered asof "
             f"(towhee_spark.streaming.stateful) for a large/changing right "
             f"side, or raise max_snapshot_rows= if it truly fits the driver")
-    snap = ctx.select(on, ts, *vcols).toPandas()
     # null merge keys make pd.merge_asof raise ('Merge keys contain null
     # values on right side'), and a single null in an integral column has
     # already widened it to float64 on the Arrow→pandas hop — drop the
