@@ -240,3 +240,77 @@ def test_transcript_curation_shuffle_budgets(spark):
         assert_max_exchanges(qs[name](spark, SF), budget)
         st = plan_stats(qs[name](spark, SF))
         assert st["python_evals"] == 0, (name, st)
+
+
+def test_python_stages_names_every_python_operator():
+    """The Python-stage count reads every Python-worker operator Spark 4.1
+    prints, including the cogroup, batch-eval and Arrow routes."""
+    from towhee_spark.plans.explain import python_stages
+
+    names = ["ArrowEvalPython", "BatchEvalPython", "MapInPandas", "MapInArrow",
+             "FlatMapGroupsInPandas", "FlatMapGroupsInArrow",
+             "FlatMapCoGroupsInPandas", "ArrowAggregatePython"]
+    for name in names:
+        plan = f"AdaptiveSparkPlan isFinalPlan=false\n+- {name} [f(x#1L)#2], [y#3]\n   +- Scan"
+        assert python_stages(plan) == 1, name
+    plan = ("MapInPandas run(a#1)#2, [a#3], false\n+- ArrowEvalPython [pred(a#1)]\n"
+            "   +- FlatMapCoGroupsInPandas [k#4], [k#5], merge(k#4)\n"
+            "      +- ArrowEvalPythonUDTF [t(a#1)]")
+    assert python_stages(plan) == 4
+    assert python_stages("Project [MapInPandasX#1, SortMergeJoin]") == 0
+
+
+def test_python_row_run_plans_one_python_operator(spark):
+    """The benchmark's map → filter → flat_map prefix (plain-Python fns,
+    native=False) is one run: one MapInPandas, no ArrowEvalPython."""
+    import re
+
+    from pyspark.sql import types as T
+
+    from towhee_spark.pipeline import Pipeline
+    from towhee_spark.plans.explain import _plan_text
+
+    def n_words(text):
+        return len(text.split())
+
+    def keep_long(n):
+        return n >= 3
+
+    def first_pieces(text):
+        return text.split()[:2]
+
+    turns = spark.createDataFrame(
+        [("c1", 1.0, 0, "a b c d"), ("c1", 2.0, 1, "e f")],
+        "conv_id string, ts double, turn_idx int, text string")
+    p = (
+        Pipeline.input("conv_id", "ts", "turn_idx", "text")
+        .map("text", "n_words", n_words, out_types=[T.LongType()], native=False)
+        .filter("n_words", "n_words", "n_words", keep_long, native=False)
+        .flat_map("text", "piece", first_pieces, native=False)
+    )
+    out = p.apply(turns, by="conv_id", order=("ts", "turn_idx"))
+    plan = _plan_text(out)
+    assert len(re.findall(r"\bMapInPandas\b", plan)) == 1, plan
+    assert "ArrowEvalPython" not in plan, plan
+    assert plan_stats(out)["python_evals"] == 1
+    assert sorted(r.piece for r in out.collect()) == ["a", "b"]
+
+
+def test_native_node_splits_python_runs(spark):
+    """A native map between two Python maps ends the first run: two
+    Python operators."""
+    from pyspark.sql import types as T
+
+    from towhee_spark.pipeline import Pipeline
+
+    df = spark.createDataFrame([("ab",), ("cde",)], "s string")
+    p = (
+        Pipeline.input("s")
+        .map("s", "n", len, out_types=[T.LongType()], native=False)
+        .map("n", "m", lambda n: n + 1, out_types=[T.LongType()])
+        .map("m", "t", lambda m: "x" * m, native=False)
+        .output("s", "t")
+    )
+    out = p.apply(df)
+    assert plan_stats(out)["python_evals"] == 2
+    assert sorted(tuple(r) for r in out.collect()) == [("ab", "xxx"), ("cde", "xxxx")]

@@ -11,10 +11,20 @@ Function dispatch: every user callable is first tried NATIVELY — called
 with ``pyspark.sql.Column`` arguments; if it returns Column(s) (e.g.
 ``lambda x: x + 1``), the node stays entirely JVM-side inside whole-stage
 codegen.  Only genuinely-Python callables fall back to Arrow-batched
-execution (``mapInPandas`` / ``applyInPandas``) — batched transfer, no
-per-row serialization (the compat layer applies the scalar fn per element
-within a batch, mirroring Towhee's per-row call contract exactly; use
+execution — batched transfer, no per-row serialization; the fn is still
+called once per row, Towhee's per-row call contract (use
 ``towhee_spark.kernels`` for vectorized hot-path kernels).
+
+Runs: each maximal run of consecutive Python map/filter/flat_map nodes
+compiles to ONE ``mapInPandas`` in which every row passes through the
+nodes' steps in order (Towhee runs one thread per node; Spark pipelines
+the run inside one Python operator, SURVEY.md §1.1). Native nodes and
+group nodes split runs. Handoff rule: values enter a run as the pandas
+batch holds them (``Series.tolist()``); inside the run, the next step
+receives the Python value the previous fn returned (a list stays a list,
+an int stays an int), and a NULL the engine emits — a missing input, a
+compat filter's failed output, a compat fan-out pad — is ``None``. This
+is how Towhee's DataQueue hands values between nodes.
 
 A Towhee pipeline invocation ``p(a, b)`` pushes one logical row through the
 DAG; a table-mode run treats the whole input DataFrame as the batch of all
@@ -61,8 +71,10 @@ from __future__ import annotations
 import copy
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field, replace
+from types import GeneratorType
 from typing import Any
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -98,12 +110,8 @@ def _tup(x) -> tuple[str, ...]:
     return (x,) if isinstance(x, str) else tuple(x)
 
 
-def _default_type() -> T.DataType:
-    return T.StringType()
-
-
 def _try_native(fn: Callable, in_cols: Sequence[str], mode=None,
-                df: DataFrame | None = None, cache: dict | None = None):
+                schema: T.StructType | None = None, cache: dict | None = None):
     """Probe fn with Column args; a Column(-tuple) result means the node can
     run JVM-side. Returns list[Column] or None. ``mode``: None=auto probe,
     False=never (force Python path), True=require (raise if not
@@ -115,8 +123,9 @@ def _try_native(fn: Callable, in_cols: Sequence[str], mode=None,
     ``'abab'``). When ``mode is None`` and the fn is ALSO callable on plain
     sample values, both interpretations are evaluated on one literal row
     (a driver-local 1-row job at plan build) and the Python path wins on
-    disagreement. Explicit ``native=True/False`` skips the check. ``cache``
-    (the node's params dict, keyed by input dtypes) memoizes the verdict so
+    disagreement. Explicit ``native=True/False`` skips the check; so does
+    ``schema=None`` (the input types the check samples). ``cache`` (the
+    node's params dict, keyed by input dtypes) memoizes the verdict so
     repeated apply() of one Pipeline pays the probe job once."""
     if mode is False:
         return None
@@ -134,17 +143,17 @@ def _try_native(fn: Callable, in_cols: Sequence[str], mode=None,
         if mode is True:
             raise ValueError("native=True but fn did not compile to Column expressions")
         return None
-    if mode is None and df is not None:
+    if mode is None and schema is not None:
         key = None
         if cache is not None:
             try:
-                key = tuple(df.schema[c].dataType.simpleString() for c in in_cols)
+                key = tuple(schema[c].dataType.simpleString() for c in in_cols)
             except Exception:
                 key = None
         if key is not None and key in cache:
             agreed = cache[key]
         else:
-            agreed = _probe_agrees(fn, in_cols, cols, df)
+            agreed = _probe_agrees(fn, in_cols, cols, schema)
             if key is not None:
                 cache[key] = agreed
         if not agreed:
@@ -172,7 +181,7 @@ def _samples_for(dt: T.DataType) -> list | None:
     return None
 
 
-def _probe_agrees(fn, in_cols, cols, df: DataFrame) -> bool:
+def _probe_agrees(fn, in_cols, cols, schema: T.StructType) -> bool:
     """True unless fn is ALSO a plain-Python fn whose Python result differs
     from the compiled Columns' result on any sampled literal row.
 
@@ -183,7 +192,7 @@ def _probe_agrees(fn, in_cols, cols, df: DataFrame) -> bool:
     native is right. A SQL-side error on the comparable rows means SQL
     semantics diverge where Python works → keep the Python path."""
     try:
-        per_col = [_samples_for(df.schema[c].dataType) for c in in_cols]
+        per_col = [_samples_for(schema[c].dataType) for c in in_cols]
     except Exception:
         return True
     if any(s is None for s in per_col):
@@ -232,11 +241,10 @@ def _probe_agrees(fn, in_cols, cols, df: DataFrame) -> bool:
            for _, res in py_ok
            for v in (res if isinstance(res, (tuple, list)) else (res,))):
         return True  # fn builds Columns regardless of input — native
-    spark = df.sparkSession
-    schema = T.StructType([T.StructField(c, df.schema[c].dataType) for c in in_cols])
+    sample_schema = T.StructType([T.StructField(c, schema[c].dataType) for c in in_cols])
     try:
         sql_rows = (
-            spark.createDataFrame([r for r, _ in py_ok], schema=schema)
+            SparkSession.active().createDataFrame([r for r, _ in py_ok], schema=sample_schema)
             .select(*[c.alias(f"__v{i}") for i, c in enumerate(cols)])
             .collect()
         )
@@ -271,17 +279,11 @@ def _probe_agrees(fn, in_cols, cols, df: DataFrame) -> bool:
 
 
 def _out_fields(out_cols, out_types) -> list[T.StructField]:
-    types = list(out_types) if out_types else [_default_type() for _ in out_cols]
+    types = list(out_types) if out_types else [T.StringType() for _ in out_cols]
     if len(types) != len(out_cols):
         raise ValueError("out_types length must match out_cols")
     types = [t if isinstance(t, T.DataType) else T._parse_datatype_string(t) for t in types]
     return [T.StructField(c, t, True) for c, t in zip(out_cols, types)]
-
-
-def _replaced_schema(df: DataFrame, out_fields: list[T.StructField]) -> T.StructType:
-    names = {f.name for f in out_fields}
-    kept = [f for f in df.schema.fields if f.name not in names]
-    return T.StructType(kept + out_fields)
 
 
 @dataclass
@@ -431,11 +433,7 @@ class Pipeline:
         ``order`` declares the within-group row order (e.g. ("ts",
         "event_id")) — required for deterministic count windows on tables.
         ``compat=True`` enables Towhee queue-artifact semantics (see _Ctx)."""
-        ctx = _Ctx(by=by, order=_tup(order), compat=compat)
-        out = df
-        for node in self._nodes:
-            out = _COMPILERS[node.kind](out, node, ctx)
-        return out
+        return _compile_nodes(df, self._nodes, _Ctx(by=by, order=_tup(order), compat=compat))
 
     __call__ = apply
 
@@ -492,67 +490,227 @@ def _compile_output(df: DataFrame, node: _Node, ctx: _Ctx) -> DataFrame:
     return df.select(*node.in_cols, *keep)
 
 
-def _compile_map(df: DataFrame, node: _Node, ctx: _Ctx) -> DataFrame:
-    if isinstance(node.fn, Pipeline):
-        return _inline_subpipeline(df, node, ctx)
-    if not node.out_cols:
-        # 0-output map: fn runs for side effects, row passes through
-        # unchanged (_map.py:72-76) — side effects don't belong in a Spark
-        # plan, so this is the identity.
-        return df
-    native = _try_native(node.fn, node.in_cols, node.params.get("native"), df,
-                         node.params.setdefault("_probe_cache", {}))
-    if native is not None and len(native) == len(node.out_cols):
-        for name, col in zip(node.out_cols, native):
-            df = df.withColumn(name, col)
-        return df
-    fields = _out_fields(node.out_cols, node.params.get("out_types"))
-    schema = _replaced_schema(df, fields)
-    in_cols, out_cols, fn = list(node.in_cols), list(node.out_cols), node.fn
-    names = [f.name for f in schema.fields]
+def _compile_nodes(df: DataFrame, nodes: Sequence[_Node], ctx: _Ctx) -> DataFrame:
+    """Compile a node list onto ``df``. Consecutive map/filter/flat_map
+    nodes whose native probe fails collect into a run that compiles to ONE
+    Python operator (_compile_run); any other node ends the run. The probe
+    reads each in-col's type from the run's derived schema."""
+    run: list[_Node] = []
+    fields: list[T.StructField] | None = None  # schema after the pending run
+    for node in nodes:
+        native = None
+        if node.kind in ("map", "filter", "flat_map") and not isinstance(node.fn, Pipeline):
+            if node.kind == "map" and not node.out_cols:
+                # 0-output map: fn runs for side effects, row passes through
+                # unchanged (_map.py:72-76) — side effects don't belong in a
+                # Spark plan, so this is the identity.
+                continue
+            if fields is None:
+                fields = list(df.schema.fields)
+            native = _native_cols(node, T.StructType(fields))
+            if native is None:
+                run.append(node)
+                fields = _step_fields(fields, node, ctx)
+                continue
+        if run:
+            df, run = _compile_run(df, run, fields, ctx), []
+        fields = None
+        df = (_NATIVE[node.kind](df, node, native, ctx) if native is not None
+              else _COMPILERS[node.kind](df, node, ctx))
+    return _compile_run(df, run, fields, ctx) if run else df
+
+
+def _native_cols(node: _Node, schema: T.StructType) -> list[Column] | None:
+    """The node's Column expressions when it compiles JVM-side, else None:
+    a map needs one Column per output, a filter one predicate, a flat_map
+    one array Column for its single output."""
+    fn_in = node.params["filter_cols"] if node.kind == "filter" else node.in_cols
+    cols = _try_native(node.fn, fn_in, node.params.get("native"), schema,
+                       node.params.setdefault("_probe_cache", {}))
+    want = len(node.out_cols) if node.kind == "map" else 1
+    if cols is None or len(cols) != want or (node.kind == "flat_map" and len(node.out_cols) != 1):
+        return None
+    return cols
+
+
+def _native_map(df: DataFrame, node: _Node, cols: list[Column], ctx: _Ctx) -> DataFrame:
+    for name, col in zip(node.out_cols, cols):
+        df = df.withColumn(name, col)
+    return df
+
+
+def _native_filter(df: DataFrame, node: _Node, cols: list[Column], ctx: _Ctx) -> DataFrame:
+    # compat keeps every row, with the outputs NULL where the predicate
+    # fails; the default drops the row (see _step_fields)
+    ok = F.coalesce(cols[0], F.lit(False))
+    if not ctx.compat:
+        df = df.filter(cols[0])
+    src = dict(zip(node.out_cols, node.in_cols))
+    return df.select(*[
+        (F.when(ok, F.col(src[f.name])) if ctx.compat else F.col(src[f.name])).alias(f.name)
+        if f.name in src else f.name
+        for f in _step_fields(df.schema.fields, node, ctx)
+    ])
+
+
+def _native_flat_map(df: DataFrame, node: _Node, cols: list[Column], ctx: _Ctx) -> DataFrame:
+    # fn of Columns returning one array Column → posexplode (the position
+    # column keeps within-parent emission order well-defined)
+    others = [c for c in df.columns if c != node.out_cols[0]]
+    df = df.select(*others, F.posexplode(cols[0]).alias("__pos", node.out_cols[0]))
+    if ctx.compat:
+        df = df.select(*[F.when(F.col("__pos") == 0, F.col(c)).alias(c)
+                         if _padded(c, node.out_cols, ctx) else c for c in df.columns])
+    return _renumber(df)
+
+
+_NATIVE = {"map": _native_map, "filter": _native_filter, "flat_map": _native_flat_map}
+
+
+def _step_fields(fields: list[T.StructField], node: _Node, ctx: _Ctx) -> list[T.StructField]:
+    """Schema after one Python row step; the native filter selects its
+    columns through it too."""
+    if node.kind == "filter":
+        # the positional in→out rename is ATOMIC (swap golden
+        # test_filter_node.py:153-181); consumed inputs are not forwarded.
+        # compat: Towhee keeps failing rows alive on side-by queues, outputs
+        # Empty and consumed inputs flowing (ref test_user_pipeline.py:
+        # 213-224 golden: (5,6,8,Empty())); _compile_output drops rows whose
+        # every OUTPUT-referenced column is Empty.
+        ins, outs = node.in_cols, node.out_cols
+        if ins == outs and not ctx.compat:
+            return fields
+        types = {f.name: f.dataType for f in fields}
+        gone = set(outs) if ctx.compat else set(ins) | set(outs)
+        return ([f for f in fields if f.name not in gone]
+                + [T.StructField(o, types[i], True) for i, o in zip(ins, outs)])
+    kept = [f for f in fields if f.name not in node.out_cols]
+    if node.kind == "flat_map" and ctx.compat:
+        kept = [T.StructField(f.name, f.dataType, True) if _padded(f.name, node.out_cols, ctx)
+                else f for f in kept]
+    return kept + _out_fields(node.out_cols, node.params.get("out_types"))
+
+
+def _compile_run(df: DataFrame, nodes: list[_Node], fields: list[T.StructField],
+                 ctx: _Ctx) -> DataFrame:
+    """ONE mapInPandas for a run of Python row nodes: each batch row passes
+    through every node's step in order (_run_batch). A run that fans out
+    emits each row's per-input-row emission index as ``__pos``, from which
+    _renumber re-derives the row order once."""
+    steps = [(n.kind, n.in_cols, n.out_cols, n.params.get("filter_cols"), n.fn)
+             for n in nodes]
+    fans = any(n.kind == "flat_map" for n in nodes)
+    if fans:
+        fields = fields + [T.StructField("__pos", T.IntegerType())]
+    names = [f.name for f in fields]
 
     def run(batches):
-        def is_missing(a):
-            if a is None:
-                return True
-            try:
-                return a != a  # NaN
-            except Exception:
-                return False
-            return False
-
-        import types as _pytypes  # noqa: PLC0415
-
-        def degen(v):
-            # generator results are materialized to lists (_map.py:85-92)
-            return list(v) if isinstance(v, _pytypes.GeneratorType) else v
-
-        def call(*args):
-            # rows with a missing (Empty≈NULL) input skip the fn and emit
-            # NULL outputs (_map.py:58-59)
-            if any(is_missing(a) is True for a in args):
-                return None if len(out_cols) == 1 else (None,) * len(out_cols)
-            r = fn(*args)
-            if len(out_cols) == 1:
-                return degen(r)
-            return tuple(degen(v) for v in r)
-
         for pdf in batches:
-            if len(pdf):
-                results = [call(*args) for args in zip(*[pdf[c] for c in in_cols])]
-                if len(out_cols) == 1:
-                    pdf = pdf.assign(**{out_cols[0]: pd.Series(results, index=pdf.index, dtype=object)})
-                else:
-                    for j, oc in enumerate(out_cols):
-                        pdf = pdf.assign(**{oc: pd.Series(
-                            [r[j] if r is not None else None for r in results],
-                            index=pdf.index, dtype=object)})
-            else:
-                for oc in out_cols:
-                    pdf = pdf.assign(**{oc: pd.Series([], dtype=object)})
-            yield pdf[names]
+            yield _run_batch(pdf, steps, names, ctx)
 
-    return df.mapInPandas(run, schema=schema)
+    out = df.mapInPandas(run, schema=T.StructType(fields))
+    return _renumber(out) if fans else out
+
+
+def _run_batch(pdf: pd.DataFrame, steps, names: list[str], ctx: _Ctx) -> pd.DataFrame:
+    """One Arrow batch through a run's steps. A column is the name of an
+    untouched batch column or the list of its current Python values; ``src``
+    maps each current row to its input row (steps drop or fan out rows in
+    order, so the rows of one input row stay adjacent)."""
+    src = list(range(len(pdf)))
+    cols: dict[str, str | list] = {c: c for c in pdf.columns}
+    batch_values: dict[str, list] = {}
+
+    def read(c):
+        v = cols[c]
+        if isinstance(v, list):
+            return v
+        if v not in batch_values:
+            batch_values[v] = pdf[v].tolist()
+        return [batch_values[v][i] for i in src]
+
+    def rows_of(in_cols):
+        return list(zip(*map(read, in_cols))) if in_cols else [()] * len(src)
+
+    def take(rows):  # keep or repeat current rows by position
+        nonlocal src
+        src = [src[r] for r in rows]
+        for c, v in cols.items():
+            if isinstance(v, list):
+                cols[c] = [v[r] for r in rows]
+
+    for kind, in_cols, out_cols, filter_cols, fn in steps:
+        if kind == "map":
+            res = [_map_row(fn, args, len(out_cols)) for args in rows_of(in_cols)]
+            for j, o in enumerate(out_cols):
+                cols[o] = [r[j] for r in res]
+        elif kind == "filter":
+            ok = [bool(fn(*args)) for args in rows_of(filter_cols)]
+            if ctx.compat:  # failing rows survive with Empty outputs (_step_fields)
+                values = [read(i) for i in in_cols]
+                for o, v in zip(out_cols, values):
+                    cols[o] = [x if keep else None for x, keep in zip(v, ok)]
+            else:  # drop, then the atomic in→out rename (_step_fields)
+                take([r for r, keep in enumerate(ok) if keep])
+                renamed = {o: cols[i] for i, o in zip(in_cols, out_cols)}
+                for i in in_cols:
+                    del cols[i]
+                cols.update(renamed)
+        else:  # flat_map
+            parent, pos, items = [], [], []
+            for r, args in enumerate(rows_of(in_cols)):
+                for j, item in enumerate(fn(*args)):
+                    parent.append(r)
+                    pos.append(j)
+                    items.append(_fan_item(item, out_cols))
+            take(parent)
+            for j, o in enumerate(out_cols):
+                cols[o] = [it[j] for it in items]
+            if ctx.compat:  # children 2..N carry Empty side columns (_padded)
+                for c in cols:
+                    if _padded(c, out_cols, ctx):
+                        cols[c] = [v if p == 0 else None for v, p in zip(read(c), pos)]
+
+    data: dict[str, Any] = {}
+    for c in names:
+        if c == "__pos":  # emission index within the input row
+            data[c] = pd.Series(src, dtype="int64").groupby(src).cumcount()
+        elif isinstance(cols[c], list):
+            data[c] = pd.Series(cols[c], dtype=object)
+        else:
+            data[c] = pdf[cols[c]].iloc[src].reset_index(drop=True)
+    return pd.DataFrame(data, columns=names)
+
+
+def _is_missing(v) -> bool:
+    """Empty in a Python value: None, or a scalar unequal to itself (NaN,
+    NaT). Arrays and pd.NA compare to no single bool and are values."""
+    if v is None:
+        return True
+    try:
+        ne = v != v
+    except Exception:
+        return False
+    return isinstance(ne, (bool, np.bool_)) and bool(ne)
+
+
+def _map_row(fn, args, n_out: int) -> tuple:
+    # a missing (Empty≈NULL) input skips the fn and emits NULL outputs
+    # (_map.py:58-59); generator results are materialized to lists
+    # (_map.py:85-92)
+    if any(_is_missing(a) for a in args):
+        return (None,) * n_out
+    res = fn(*args)
+    return tuple(list(v) if isinstance(v, GeneratorType) else v
+                 for v in ((res,) if n_out == 1 else res))
+
+
+def _fan_item(item, out_cols) -> tuple:
+    if len(out_cols) == 1:
+        return (item,)
+    if isinstance(item, (tuple, list, np.ndarray)):
+        return tuple(item)
+    raise TypeError(f"flat_map fn item {item!r} not splittable into {out_cols}")
 
 
 def _inline_subpipeline(df: DataFrame, node: _Node, ctx: _Ctx) -> DataFrame:
@@ -578,8 +736,8 @@ def _inline_subpipeline(df: DataFrame, node: _Node, ctx: _Ctx) -> DataFrame:
     for outer, inner in zip(node.in_cols, sub_in):
         if outer != inner:
             out = out.withColumn(inner, F.col(outer))
-    for sn in sub_nodes[1:-1]:  # body only: outer pipeline keeps its columns
-        out = _COMPILERS[sn.kind](out, sn, ctx)
+    # body only: the outer pipeline keeps its columns
+    out = _compile_nodes(out, sub_nodes[1:-1], ctx)
     for inner, outer in zip(sub_out, node.out_cols):
         if inner != outer:
             out = out.withColumn(outer, F.col(inner)).drop(inner)
@@ -587,112 +745,15 @@ def _inline_subpipeline(df: DataFrame, node: _Node, ctx: _Ctx) -> DataFrame:
     return out.drop(*drop_bridges)
 
 
-def _compile_filter(df: DataFrame, node: _Node, ctx: _Ctx) -> DataFrame:
-    fcols = node.params["filter_cols"]
-    native = _try_native(node.fn, fcols, node.params.get("native"), df,
-                         node.params.setdefault("_probe_cache", {}))
-    if native is not None and len(native) == 1:
-        pred_col = native[0]
-    else:
-        fn, fcl = node.fn, list(fcols)
-
-        @F.pandas_udf(T.BooleanType())
-        def pred(*series: pd.Series) -> pd.Series:
-            return pd.Series([bool(fn(*args)) for args in zip(*series)])
-
-        pred_col = pred(*[F.col(c) for c in fcols])
-    if ctx.compat:
-        # Towhee keeps failing rows alive on side-by queues: every row
-        # survives, the renamed outputs are Empty/NULL on failures and the
-        # consumed inputs keep flowing (ref test_user_pipeline.py:213-224
-        # golden: (5,6,8,Empty())). Rows all of whose OUTPUT-referenced
-        # columns are Empty vanish at output (see _compile_output).
-        ok = F.coalesce(pred_col, F.lit(False))
-        passthrough = [c for c in df.columns if c not in set(node.out_cols)]
-        outs = [
-            F.when(ok, F.col(i)).otherwise(F.lit(None)).alias(o)
-            for i, o in zip(node.in_cols, node.out_cols)
-        ]
-        return df.select(*passthrough, *outs)
-    df = df.filter(pred_col)
-    if tuple(node.in_cols) == tuple(node.out_cols):
-        return df
-    # positional in→out rename must be ATOMIC (a swap like in=(a,b),
-    # out=(b,a) breaks under sequential withColumn — reference golden:
-    # test_filter_node.py:153-181); consumed input names are not forwarded.
-    ins, outs = set(node.in_cols), set(node.out_cols)
-    passthrough = [c for c in df.columns if c not in ins and c not in outs]
-    renamed = [F.col(i).alias(o) for i, o in zip(node.in_cols, node.out_cols)]
-    return df.select(*passthrough, *renamed)
-
-
-def _compile_flat_map(df: DataFrame, node: _Node, ctx: _Ctx) -> DataFrame:
-    # Native path: fn of Columns returning one array Column → posexplode
-    # (the position column keeps within-parent emission order well-defined).
-    native = _try_native(node.fn, node.in_cols, node.params.get("native"), df,
-                         node.params.setdefault("_probe_cache", {}))
-    if native is not None and len(native) == 1 and len(node.out_cols) == 1:
-        others = [c for c in df.columns if c != node.out_cols[0]]
-        df = df.select(*others, F.posexplode(native[0]).alias("__pos", node.out_cols[0]))
-        return _renumber(_pad_fanout(df, node.out_cols, ctx))
-    fields = _out_fields(node.out_cols, node.params.get("out_types"))
-    schema = _replaced_schema(df, fields)
-    if _ROW_ORDER in df.columns and _ROW_ORDER not in [f.name for f in fields]:
-        pass
-    in_cols, out_cols, fn = list(node.in_cols), list(node.out_cols), node.fn
-    names = [f.name for f in schema.fields]
-
-    def run(batches):
-        import numpy as np  # noqa: PLC0415
-
-        def as_outputs(item):
-            if len(out_cols) == 1:
-                return (item,)
-            if isinstance(item, (tuple, list, np.ndarray)):
-                return tuple(item)
-            raise TypeError(f"flat_map fn item {item!r} not splittable into {out_cols}")
-
-        # zip-over-columns, not iterrows: per-row Series materialization is
-        # ~10× the cost of the (contractual) per-row fn call itself
-        passthru = [c for c in names if c not in out_cols and c != "__pos"]
-        for pdf in batches:
-            in_lists = [pdf[c].tolist() for c in in_cols]
-            pt_lists = [pdf[c].tolist() for c in passthru]
-            out_data: dict[str, list] = {c: [] for c in names}
-            for ridx, args in enumerate(zip(*in_lists)):
-                for j, item in enumerate(fn(*args)):
-                    for c, v in zip(out_cols, as_outputs(item)):
-                        out_data[c].append(v)
-                    for c, col in zip(passthru, pt_lists):
-                        out_data[c].append(col[ridx])
-                    out_data["__pos"].append(j)
-            if out_data["__pos"]:
-                yield pd.DataFrame(out_data, columns=names)
-            else:
-                yield pd.DataFrame({c: pd.Series([], dtype=object) for c in names})
-
-    schema = T.StructType(list(schema.fields) + [T.StructField("__pos", T.IntegerType())])
-    names = [f.name for f in schema.fields]
-    return _renumber(_pad_fanout(df.mapInPandas(run, schema=schema), node.out_cols, ctx))
-
-
-def _pad_fanout(df: DataFrame, out_cols, ctx: _Ctx) -> DataFrame:
+def _padded(c: str, out_cols, ctx: _Ctx) -> bool:
     """compat: the reference emits a flat_map parent's side columns only on
     the FIRST child row — rows 2..N carry Empty() (test_flat_map_node.py:
-    278-318 golden: num=[1,2] then Empty). Default (non-compat) replicates
-    parent values (relational explode)."""
-    if not ctx.compat:
-        return df
-    # never pad the grouping key: it is an engine concept (apply(by=...)),
-    # not a Towhee queue column — NULLing it would merge every fan-out row
-    # into one NULL group for downstream window/reduce nodes
-    keep = set(out_cols) | ({ctx.by} if ctx.by else set())
-    return df.select(*[
-        F.when(F.col("__pos") == 0, F.col(c)).otherwise(F.lit(None)).alias(c)
-        if (c not in keep and not c.startswith("__"))
-        else F.col(c)
-        for c in df.columns
-    ])
+    278-318 golden: num=[1,2] then Empty); the default replicates them
+    (relational explode). Never padded: the outputs, ``__`` bookkeeping and
+    the grouping key — an engine concept (apply(by=...)), not a Towhee queue
+    column; NULLing it would merge every fan-out row into one NULL group
+    for downstream window/reduce nodes."""
+    return c not in out_cols and c != ctx.by and not c.startswith("__")
 
 
 def _renumber(df: DataFrame) -> DataFrame:
@@ -700,18 +761,10 @@ def _renumber(df: DataFrame) -> DataFrame:
     Secondary sort on the fan-out position — row_number over parent order
     alone would tie all children of one parent and break emission order."""
     if _ROW_ORDER in df.columns and _INVOCATION in df.columns:
-        order = [F.col(_ROW_ORDER)]
-        if "__pos" in df.columns:
-            order.append(F.col("__pos"))
+        order = [c for c in (_ROW_ORDER, "__pos") if c in df.columns]
         w = Window.partitionBy(_INVOCATION).orderBy(*order)
         df = df.withColumn(_ROW_ORDER, F.row_number().over(w))
     return df.drop("__pos")
-
-
-def _group_cols(df: DataFrame, by: str | None) -> list[str]:
-    if by:
-        return [by]
-    return []
 
 
 def _order_cols(df: DataFrame, ctx: _Ctx) -> list[str]:
@@ -727,23 +780,6 @@ def _order_cols(df: DataFrame, ctx: _Ctx) -> list[str]:
     return []
 
 
-def _nonmissing(values):
-    """Per-column Empty/NULL removal for window-family fns: the reference
-    feeds each column's stream with its own Empties skipped independently
-    (_window_base.py:68-71; golden test_reduce.py:234-276)."""
-    out = []
-    for v in values:
-        if v is None:
-            continue
-        try:
-            if v != v:  # NaN
-                continue
-        except Exception:
-            pass
-        out.append(v)
-    return out
-
-
 def _native_agg(df2, node, group_keys):
     """Window-family fast path: probe the fn with Column args — a fn built
     from aggregate expressions (``lambda v: (F.count(v), F.sum(v))``)
@@ -757,28 +793,25 @@ def _native_agg(df2, node, group_keys):
         return None
     try:
         aliased = [c.alias(o) for c, o in zip(agg_cols, node.out_cols)]
-        grouped = df2.groupBy(*group_keys) if group_keys else df2.groupBy()
-        return grouped.agg(*aliased)
+        return df2.groupBy(*group_keys).agg(*aliased)
     except Exception:  # non-aggregate Column expr → per-group Python path
         return None
 
 
-def _apply_grouped(df, node, ctx: _Ctx, assign_extra_cols, out_extra_fields):
+def _apply_grouped(df, node, ctx: _Ctx, assign_extra_cols):
     """Shared skeleton for window-family nodes: assign group/window ids,
     then applyInPandas the list-taking fn per (by, window) group."""
     in_cols, out_cols, fn = list(node.in_cols), list(node.out_cols), node.fn
     fields = _out_fields(node.out_cols, node.params.get("out_types"))
-    keys = _group_cols(df, ctx.by)
+    keys = [ctx.by] if ctx.by else []
     order = _order_cols(df, ctx)
     df2, win_keys = assign_extra_cols(df, keys, order)
     group_keys = keys + win_keys
-    if not ctx.compat and not out_extra_fields:
+    if not ctx.compat:
         nat = _native_agg(df2, node, group_keys)
         if nat is not None:
             return nat
-    schema = T.StructType(
-        [df2.schema[k] for k in group_keys] + out_extra_fields + fields
-    )
+    schema = T.StructType([df2.schema[k] for k in group_keys] + fields)
     names = [f.name for f in schema.fields]
     sort_cols = [c for c in order if c in df2.columns]
     # compat: an all-Empty window/window_all never emits, but reduce on an
@@ -789,24 +822,20 @@ def _apply_grouped(df, node, ctx: _Ctx, assign_extra_cols, out_extra_fields):
     def run(key, pdf):
         if sort_cols:
             pdf = pdf.sort_values(sort_cols, kind="mergesort")
-        args = [_nonmissing(pdf[c]) for c in in_cols]
+        # each column's stream skips its own Empties independently
+        # (_window_base.py:68-71; golden test_reduce.py:234-276)
+        args = [[v for v in pdf[c] if not _is_missing(v)] for c in in_cols]
         if skip_empty and all(len(a) == 0 for a in args):
             return pd.DataFrame(columns=names)
         res = fn(*args)
         res = res if isinstance(res, tuple) else (res,)
         d = dict(zip(group_keys, key))
-        for f_ in out_extra_fields:
-            d[f_.name] = pdf[f_.name].iloc[0] if f_.name in pdf.columns else None
         d.update(dict(zip(out_cols, res)))
         return pd.DataFrame([d], columns=names)
 
-    if group_keys:
-        res = df2.groupBy(*group_keys).applyInPandas(run, schema=schema)
-    else:  # global group: single partition fold
-        res = df2.withColumn("__g", F.lit(1)).groupBy("__g").applyInPandas(
-            lambda key, pdf: run((), pdf), schema=schema
-        )
-    return res
+    # no key: one global group (a single-partition fold)
+    return df2.groupBy(*(group_keys or [F.lit(1).alias("__g")])).applyInPandas(
+        run, schema=schema)
 
 
 def _compile_window(df: DataFrame, node: _Node, ctx: _Ctx) -> DataFrame:
@@ -838,11 +867,8 @@ def _compile_window(df: DataFrame, node: _Node, ctx: _Ctx) -> DataFrame:
                 extra_order=[o for o in order[1:]], out="__idx",
             )
         else:
-            w = (
-                Window.partitionBy(*[F.col(k) for k in keys]).orderBy(*order)
-                if keys
-                else Window.orderBy(*order) if order else Window.orderBy(F.monotonically_increasing_id())
-            )
+            w = (Window.partitionBy(*keys).orderBy(*order) if keys or order
+                 else Window.orderBy(F.monotonically_increasing_id()))
             df = df.withColumn("__idx", F.row_number().over(w) - 1)
         idx = F.col("__idx")
         lo = F.greatest(F.lit(0), F.ceil((idx - F.lit(size - 1)) / F.lit(step))).cast("long")
@@ -853,7 +879,7 @@ def _compile_window(df: DataFrame, node: _Node, ctx: _Ctx) -> DataFrame:
         df = df.withColumn("__wid", F.explode(wids)).drop("__idx")
         return df, ["__wid"]
 
-    res = _apply_grouped(df, node, ctx, assign, []).drop("__g")
+    res = _apply_grouped(df, node, ctx, assign)
     wid_col = node.params.get("wid_col")
     if wid_col:
         return res.withColumnRenamed("__wid", wid_col)
@@ -925,7 +951,7 @@ def _compile_time_window(df: DataFrame, node: _Node, ctx: _Ctx) -> DataFrame:
     size, step, ts_col = node.params["size"], node.params["step"], node.params["ts"]
     exact = node.params.get("exact", True)
     emit_start = node.params.get("emit_start")
-    keys = _group_cols(df, ctx.by)
+    keys = [ctx.by] if ctx.by else []
     is_ts = dict(df.dtypes)[ts_col].startswith("timestamp")
     # epoch_us handles TIMESTAMP_NTZ scans session-tz-independently
     # (a bare cast("double") rejects NTZ in Spark 4 ANSI mode);
@@ -1040,11 +1066,7 @@ def _compile_time_window(df: DataFrame, node: _Node, ctx: _Ctx) -> DataFrame:
                 .drop("__ck", "__pl", "__prevlast", "__carryB")
             )
         else:
-            kw = (
-                Window.partitionBy(*keys).orderBy("__ms")
-                if keys
-                else Window.orderBy("__ms")
-            )
+            kw = Window.partitionBy(*keys).orderBy("__ms")
             prev = F.lag("__ms").over(kw)
             base_evt = pair_base(prev, F.col("__ms"))
             run_base = F.coalesce(
@@ -1074,14 +1096,10 @@ def _compile_time_window(df: DataFrame, node: _Node, ctx: _Ctx) -> DataFrame:
     )
     # each window folds in (timestamp_col, *declared order) order
     tw_ctx = replace(ctx, order=tuple(dict.fromkeys((ts_col, *ctx.order))))
-    res = _apply_grouped(df, node, tw_ctx, lambda *_: (df2, ["__wstart"]), [])
+    res = _apply_grouped(df, node, tw_ctx, lambda *_: (df2, ["__wstart"]))
     if exact:
         # per-key window ordinal (the exact path's historical row order)
-        ow = (
-            Window.partitionBy(*keys).orderBy("__wstart")
-            if keys
-            else Window.orderBy("__wstart")
-        )
+        ow = Window.partitionBy(*keys).orderBy("__wstart")
         res = res.withColumn(_ROW_ORDER, (F.row_number().over(ow) - 1).cast("long"))
     if emit_start:
         return res.withColumnRenamed("__wstart", emit_start)
@@ -1089,18 +1107,10 @@ def _compile_time_window(df: DataFrame, node: _Node, ctx: _Ctx) -> DataFrame:
 
 
 def _compile_window_all(df: DataFrame, node: _Node, ctx: _Ctx) -> DataFrame:
-    def assign(df, keys, order):
-        return df, []
-
-    res = _apply_grouped(df, node, ctx, assign, [])
-    return res.drop("__g") if "__g" in res.columns else res
-
-
-def _compile_reduce(df: DataFrame, node: _Node, ctx: _Ctx) -> DataFrame:
-    # Same table semantics as window_all (fold whole group → one row); the
-    # reference feeds generators instead of lists (_reduce.py:57-76) — the
-    # fn contract (iterable per column) is identical.
-    return _compile_window_all(df, node, ctx)
+    """Fold the whole group → one row; reduce compiles the same way (the
+    reference feeds it generators instead of lists, _reduce.py:57-76 — the
+    fn contract, one iterable per column, is identical)."""
+    return _apply_grouped(df, node, ctx, lambda df, keys, order: (df, []))
 
 
 def _is_scalar_branch(branch: list[_Node]) -> bool:
@@ -1122,12 +1132,13 @@ def _compile_concat(df: DataFrame, node: _Node, ctx: _Ctx) -> DataFrame:
         )
         writes: dict[str, str] = {}
         new_order: list[str] = []
+        renamed: list[_Node] = []
         for bi, branch in enumerate(branches):
             local = {c: f"__fork__{c}" for c in fork_cols}
             for ni, n in enumerate(branch):
                 new_in = tuple(local.get(c, c) for c in n.in_cols)
                 new_out = tuple(f"__b{bi}_{ni}__{c}" for c in n.out_cols)
-                acc = _compile_map(acc, _Node("map", new_in, new_out, n.fn, n.params), ctx)
+                renamed.append(_Node("map", new_in, new_out, n.fn, n.params))
                 for oc, nc in zip(n.out_cols, new_out):
                     local[oc] = nc
             # the whole branch VIEW overrides (Towhee zips row dicts with
@@ -1140,20 +1151,16 @@ def _compile_concat(df: DataFrame, node: _Node, ctx: _Ctx) -> DataFrame:
         final = [F.col(writes[c]).alias(c) for c in fork_cols] + [
             F.col(writes[c]).alias(c) for c in new_order
         ]
-        return acc.select(*final)
+        return _compile_nodes(acc, renamed, ctx).select(*final)
 
     scalars = [b for b in branches if _is_scalar_branch(b)]
     streams = [b for b in branches if not _is_scalar_branch(b)]
     if len(streams) > 1:
         base = _zip_stream_branches(df, streams, ctx)
     else:
-        base = df
-        for n in (streams[0] if streams else []):
-            base = _COMPILERS[n.kind](base, n, ctx)
+        base = _compile_nodes(df, streams[0] if streams else [], ctx)
     for b in scalars:
-        sdf = df
-        for n in b:
-            sdf = _COMPILERS[n.kind](sdf, n, ctx)
+        sdf = _compile_nodes(df, b, ctx)
         keys = [ctx.by] if ctx.by and ctx.by in sdf.columns and ctx.by in base.columns else []
         if keys:
             base = base.join(F.broadcast(sdf), on=keys, how="left")
@@ -1174,20 +1181,14 @@ def _zip_stream_branches(df: DataFrame, streams: list, ctx: _Ctx) -> DataFrame:
     part_keys = list(dict.fromkeys(part_keys))
     compiled = []
     for b in streams:
-        bdf = df
-        for n in b:
-            bdf = _COMPILERS[n.kind](bdf, n, ctx)
+        bdf = _compile_nodes(df, b, ctx)
         order = _order_cols(bdf, ctx)
         if not order:
             raise ValueError(
                 "multi-branch concat needs a positional row order: run in "
                 "parity mode (run_rows) or pass order= to apply()"
             )
-        w = (
-            Window.partitionBy(*part_keys).orderBy(*order)
-            if part_keys
-            else Window.orderBy(*order)
-        )
+        w = Window.partitionBy(*part_keys).orderBy(*order)
         compiled.append(bdf.withColumn("__zip", F.row_number().over(w)))
     owner: dict[str, int] = {}
     for bi, bdf in enumerate(compiled):
@@ -1212,11 +1213,9 @@ _COMPILERS = {
     "input": _compile_input,
     "output": _compile_output,
     "concat": _compile_concat,
-    "map": _compile_map,
-    "filter": _compile_filter,
-    "flat_map": _compile_flat_map,
+    "map": _inline_subpipeline,
     "window": _compile_window,
     "time_window": _compile_time_window,
     "window_all": _compile_window_all,
-    "reduce": _compile_reduce,
+    "reduce": _compile_window_all,
 }

@@ -15,8 +15,24 @@ import re
 from pyspark.sql import DataFrame
 
 
+# every operator that runs Python workers, as Spark 4.1 prints it
+# (org.apache.spark.sql.execution.python.*Exec minus "Exec")
+_PYTHON_OPS = (
+    "ArrowEvalPython", "ArrowEvalPythonUDTF", "BatchEvalPython", "BatchEvalPythonUDTF",
+    "ArrowAggregatePython", "ArrowWindowPython", "MapInPandas", "MapInArrow",
+    "FlatMapGroupsInPandas", "FlatMapGroupsInArrow", "FlatMapCoGroupsInPandas",
+    "FlatMapCoGroupsInArrow", "FlatMapGroupsInPandasWithState",
+)
+_PYTHON_OP_RE = re.compile(r"\b(?:%s)\b" % "|".join(_PYTHON_OPS))
+
+
 def _plan_text(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+
+
+def python_stages(plan: str) -> int:
+    """Number of Python-worker operators named in a physical-plan string."""
+    return len(_PYTHON_OP_RE.findall(plan))
 
 
 def plan_stats(df: DataFrame) -> dict[str, int]:
@@ -27,7 +43,7 @@ def plan_stats(df: DataFrame) -> dict[str, int]:
         "broadcasts": len(re.findall(r"BroadcastExchange|BroadcastHashJoin", plan)),
         "sorts": len(re.findall(r"^\s*[+:]?-?\s*\*?\(?\d*\)?\s*Sort\s", plan, re.M)),
         "windows": len(re.findall(r"\bWindow\b", plan)),
-        "python_evals": len(re.findall(r"ArrowEvalPython|FlatMapGroupsInPandas|MapInPandas", plan)),
+        "python_evals": python_stages(plan),
         # the simple plan string marks codegen stages as "*(n)"; the word
         # "WholeStageCodegen" only appears in the formatted/tree renderings
         "codegen_spans": len({m for m in re.findall(r"\*\((\d+)\)", plan)}),

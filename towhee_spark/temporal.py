@@ -468,47 +468,8 @@ def bfill_chunked(
     with time reversed: backward fill within (key, time-chunk), then each
     chunk's trailing nulls take the FIRST non-null value of any LATER
     chunk, carried over the tiny chunk frame and joined back."""
-    keys = _as_list(key)
-    chunk = "__bf_chunk"
-    ts_dtype = df.schema[ts].dataType
-    df2 = df.withColumn(chunk, _chunk_id(ts, ts_dtype, chunk_seconds))
-    extras = [c for c in order_extra if c in df.columns]
-    # reverse-order running frame (the bfill O(rows) form — an
-    # unbounded-FOLLOWING frame re-aggregates the tail per row)
-    w_local = (
-        Window.partitionBy(*keys, chunk)
-        .orderBy(F.col(ts).desc(), *[F.col(e).desc() for e in extras])
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    filled = df2
-    for c in cols:
-        filled = filled.withColumn(c + suffix, F.last(c, ignorenulls=True).over(w_local))
-
-    def first_nonnull(c):
-        ordk = [_time_value(F.col(ts), ts_dtype).alias("o")] \
-            + [F.col(e).alias(f"o{i}") for i, e in enumerate(extras)]
-        st = F.when(F.col(c).isNotNull(), F.struct(*ordk, F.col(c).alias("v")))
-        return F.min(st)["v"].alias(c + "__first")
-
-    chunk_firsts = df2.groupBy(*keys, chunk).agg(*[first_nonnull(c) for c in cols])
-    w_carry = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col(chunk).desc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = chunk_firsts.select(
-        *keys, chunk,
-        *[
-            F.last(c + "__first", ignorenulls=True).over(w_carry).alias(c + "__carry")
-            for c in cols
-        ],
-    )
-    out = carry_join(filled, carry, keys + [chunk], broadcast=broadcast_carry)
-    for c in cols:
-        out = out.withColumn(
-            c + suffix, F.coalesce(F.col(c + suffix), F.col(c + "__carry"))
-        ).drop(c + "__carry")
-    return out.drop(chunk)
+    return _fill_chunked(df, cols, key, ts, chunk_seconds, suffix, order_extra,
+                         broadcast_carry, forward=False)
 
 
 def lag_lead_chunked(
@@ -759,40 +720,57 @@ def locf_chunked(
     chunk's leading nulls. Two shuffles total, no Python, no single-key
     serialization point.
     """
+    return _fill_chunked(df, cols, key, ts, chunk_seconds, suffix, order_extra,
+                         broadcast_carry, forward=True)
+
+
+def _fill_chunked(df, cols, key, ts, chunk_seconds, suffix, order_extra,
+                  broadcast_carry, forward: bool) -> DataFrame:
+    """The shared body of :func:`locf_chunked` (``forward``) and
+    :func:`bfill_chunked` (time reversed: desc order, min struct, carry
+    from later chunks)."""
     keys = _as_list(key)
-    chunk = "__locf_chunk"
+    chunk = "__locf_chunk" if forward else "__bf_chunk"
     ts_dtype = df.schema[ts].dataType
     df2 = df.withColumn(chunk, _chunk_id(ts, ts_dtype, chunk_seconds))
 
+    def along(c):  # time order (forward) or its exact reverse (backward)
+        return F.col(c) if forward else F.col(c).desc()
+
     extras = [c for c in order_extra if c in df.columns]
+    # running frame in fill order — for bfill the reverse running frame is
+    # the O(rows) form; an unbounded-FOLLOWING frame re-aggregates the tail
+    # per row
     w_local = (
         Window.partitionBy(*keys, chunk)
-        .orderBy(ts, *extras)
+        .orderBy(along(ts), *[along(e) for e in extras])
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     filled = df2
     for c in cols:
         filled = filled.withColumn(c + suffix, F.last(c, ignorenulls=True).over(w_local))
 
-    # per-(key, chunk) last non-null per column, order-independent
-    def last_nonnull(c):
+    # per-(key, chunk) edge non-null per column (the last for locf, the
+    # first for bfill), order-independent max/min-struct aggregate
+    def edge_nonnull(c):
         ordk = [_time_value(F.col(ts), ts_dtype).alias("o")] \
             + [F.col(e).alias(f"o{i}") for i, e in enumerate(extras)]
         st = F.when(F.col(c).isNotNull(), F.struct(*ordk, F.col(c).alias("v")))
-        return F.max(st)["v"].alias(c + "__last")
+        return (F.max(st) if forward else F.min(st))["v"].alias(c + "__edge")
 
-    chunk_lasts = df2.groupBy(*keys, chunk).agg(*[last_nonnull(c) for c in cols])
-    # carry INTO each chunk = LOCF of lasts over STRICTLY EARLIER chunks
+    chunk_edges = df2.groupBy(*keys, chunk).agg(*[edge_nonnull(c) for c in cols])
+    # carry INTO each chunk = fill of edges over STRICTLY EARLIER chunks in
+    # fill order
     w_carry = (
         Window.partitionBy(*keys)
-        .orderBy(chunk)
+        .orderBy(along(chunk))
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    carry = chunk_lasts.select(
+    carry = chunk_edges.select(
         *keys,
         chunk,
         *[
-            F.last(c + "__last", ignorenulls=True).over(w_carry).alias(c + "__carry")
+            F.last(c + "__edge", ignorenulls=True).over(w_carry).alias(c + "__carry")
             for c in cols
         ],
     )
