@@ -314,3 +314,20 @@ def test_native_node_splits_python_runs(spark):
     out = p.apply(df)
     assert plan_stats(out)["python_evals"] == 2
     assert sorted(tuple(r) for r in out.collect()) == [("ab", "xxx"), ("cde", "xxxx")]
+
+
+def test_asof_and_one_table_pte_plan_one_sweep(spark):
+    """The benchmark's as-of call and one-table point_in_time_enrich plan
+    the same sweep: one exchange, one sort, one window, no Python."""
+    from towhee_spark.plans.explain import _plan_text, python_stages
+    from towhee_spark.temporal import point_in_time_enrich
+
+    t = spark.createDataFrame(transcripts_pdf(10), schema=TRANSCRIPT_SCHEMA)
+    c = spark.createDataFrame(context_pdf(transcripts_pdf(10)), schema=CONTEXT_SCHEMA)
+    for out in (asof_join(t, c, direction="backward", tolerance=3600.0,
+                          matched_ts_col="ctx_ts"),
+                point_in_time_enrich(t, {"ctx": c}, tolerances={"ctx": 3600.0},
+                                     matched_ts=True)):
+        st = plan_stats(out)
+        assert (st["exchanges"], st["sorts"], st["windows"]) == (1, 1, 1), st
+        assert python_stages(_plan_text(out)) == 0

@@ -4,6 +4,7 @@ mapInPandas. Goldens pin the row semantics every step keeps inside a run
 inputs, emptied batches, nested bodies); the handoff test pins what the
 next step of a run receives."""
 
+import pytest
 from pyspark.sql import types as T
 
 from towhee_spark.pipeline import Pipeline
@@ -121,3 +122,13 @@ def test_next_step_receives_the_returned_value(spark):
     got = sorted(p.apply(df).collect(), key=lambda r: r.s or "")
     assert [tuple(r) for r in got] == [
         (None, None, None, None), ("1", 1, "int", "list"), ("3", 3, "int", "list")]
+
+
+@pytest.mark.parametrize("native", [True, False])
+def test_map_overwriting_a_column_keeps_its_position(spark, native):
+    df = spark.createDataFrame([(1, "x"), (5, "y")], "a long, b string")
+    p = Pipeline.input("a", "b").map("a", "a", lambda x: x + 1,
+                                     out_types=[T.LongType()], native=native)
+    out = p.apply(df)
+    assert out.columns == ["a", "b"]
+    assert sorted(tuple(r) for r in out.collect()) == [(2, "x"), (6, "y")]

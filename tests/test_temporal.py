@@ -11,7 +11,6 @@ from towhee_spark import asof_join, bfill, lag_lead, locf, sessionize
 from towhee_spark.schema import CONTEXT_SCHEMA, TRANSCRIPT_SCHEMA
 from towhee_spark.synth import context_pdf, transcripts_pdf
 from towhee_spark import temporal
-from towhee_spark.temporal import asof_join_cogroup
 
 
 @pytest.fixture(scope="module")
@@ -73,19 +72,6 @@ def test_asof_join_matrix(spark, corpus, sdfs, direction, tolerance, allow_exact
                   allow_exact_matches=allow_exact)
     )
     exp = oracle_asof(t, c, direction, tolerance, allow_exact)
-    assert_asof_matches(got, exp)
-
-
-@pytest.mark.parametrize("direction", ["backward", "forward"])
-@pytest.mark.parametrize("allow_exact", [True, False])
-def test_asof_cogroup_matches_oracle(spark, corpus, sdfs, direction, allow_exact):
-    t, c = corpus
-    st, sc = sdfs
-    got = collect_sorted(
-        asof_join_cogroup(st, sc, direction=direction, tolerance=900.0,
-                          allow_exact_matches=allow_exact)
-    )
-    exp = oracle_asof(t, c, direction, tolerance=900.0, allow_exact=allow_exact)
     assert_asof_matches(got, exp)
 
 
@@ -936,3 +922,86 @@ def test_asof_nearest_tie_and_plan(spark):
     r3 = asof_join(t, c2, direction="nearest", tolerance=0.5).collect()[0]
     assert r3["ctx_label"] is None
     assert_max_exchanges(asof_join(t, c, direction="nearest"), 1)
+
+
+@pytest.mark.parametrize("direction", ["backward", "forward"])
+@pytest.mark.parametrize("allow_exact", [True, False])
+def test_asof_duplicate_ties_agree_across_entry_points(spark, direction, allow_exact):
+    """Duplicate right (key, ts) rows with distinct payloads, some exactly at
+    a left ts: asof_join, asof_join_chunked (the key spans 5 chunks) and,
+    backward, one-table point_in_time_enrich resolve them alike — MAX
+    payload backward, MIN forward."""
+    from towhee_spark.temporal import asof_join_chunked, point_in_time_enrich
+
+    left = spark.createDataFrame(
+        [(k, i, float(t)) for k in ("c", "d") for i, t in enumerate(range(10, 70, 10))],
+        "conv_id string, turn_idx int, ts double")
+    right = spark.createDataFrame(
+        [(k, float(t), v, f"s{v}") for k in ("c", "d")
+         for t, v in [(5, 1), (5, 7), (5, 3), (20, 4), (20, 9), (35, 2), (35, 8),
+                      (50, 6), (50, 5)]],
+        "conv_id string, ts double, v long, s string")
+    kw = dict(direction=direction, allow_exact_matches=allow_exact, tolerance=100.0)
+    base = asof_join(left, right, **kw)
+    got = {(r.conv_id, r.turn_idx): (r.v, r.s) for r in base.collect()}
+    chunked = asof_join_chunked(left, right, chunk_seconds=15.0, **kw)
+    assert {(r.conv_id, r.turn_idx): (r.v, r.s) for r in chunked.collect()} == got
+    # left ts 10 sees (5, ·) x3 backward and (20, ·) x2 forward; left ts 20
+    # meets (20, 4) and (20, 9) exactly
+    assert got[("c", 0)] == ((7, "s7") if direction == "backward" else (4, "s4"))
+    assert got[("c", 1)] == {("backward", True): (9, "s9"), ("forward", True): (4, "s4"),
+                             ("backward", False): (7, "s7"),
+                             ("forward", False): (2, "s2")}[direction, allow_exact]
+    if direction == "backward":
+        pte = point_in_time_enrich(left, {"r": right}, allow_exact_matches=allow_exact,
+                                   tolerances={"r": 100.0})
+        assert {(r.conv_id, r.turn_idx): (r.v, r.s) for r in pte.collect()} == got
+
+    clash = right.withColumnRenamed("v", "turn_idx")
+    with pytest.raises(ValueError) as plain:
+        asof_join(left, clash)
+    with pytest.raises(ValueError) as chunk_err:
+        asof_join_chunked(left, clash)
+    assert str(chunk_err.value) == str(plain.value)
+
+
+def test_asof_null_ts_never_matches(spark):
+    """A NULL ts on either side never matches (DuckDB ASOF JOIN), on every
+    as-of entry point and direction."""
+    from towhee_spark.temporal import asof_join_chunked, point_in_time_enrich
+
+    left = spark.createDataFrame([("c", 0, 10.0), ("c", 1, None)],
+                                 "conv_id string, turn_idx int, ts double")
+    right = spark.createDataFrame([("c", None, 1), ("c", 20.0, 2)],
+                                  "conv_id string, ts double, v long")
+    want = {"backward": {0: None, 1: None}, "forward": {0: 2, 1: None},
+            "nearest": {0: 2, 1: None}}
+    for direction, exp in want.items():
+        outs = [asof_join(left, right, direction=direction)]
+        if direction != "nearest":
+            outs.append(asof_join_chunked(left, right, direction=direction,
+                                          chunk_seconds=5.0))
+        if direction == "backward":
+            outs.append(point_in_time_enrich(left, {"r": right}))
+        for out in outs:
+            assert {r.turn_idx: r.v for r in out.collect()} == exp, direction
+
+
+def test_asof_tolerance_bound_is_inclusive_at_fractional_seconds(spark):
+    """A match exactly ``tolerance`` away is kept even when tolerance * 1e6
+    is not exact in floating point (1.001 s), on every entry point."""
+    import datetime as dt
+
+    from towhee_spark.temporal import asof_join_chunked, point_in_time_enrich
+
+    base = dt.datetime(2026, 1, 1, 0, 0, 10)
+    gap = dt.timedelta(microseconds=1_001_000)
+    left = spark.createDataFrame([("c", 0, base)], "conv_id string, turn_idx int, ts timestamp")
+    back = spark.createDataFrame([("c", base - gap, 1)], "conv_id string, ts timestamp, v long")
+    fwd = spark.createDataFrame([("c", base + gap, 2)], "conv_id string, ts timestamp, v long")
+    outs = [asof_join(left, back, tolerance=1.001),
+            asof_join(left, fwd, direction="forward", tolerance=1.001),
+            asof_join(left, back, direction="nearest", tolerance=1.001),
+            asof_join_chunked(left, back, tolerance=1.001, chunk_seconds=1.0),
+            point_in_time_enrich(left, {"r": back}, tolerances={"r": 1.001})]
+    assert [out.first().v for out in outs] == [1, 2, 1, 1, 1]

@@ -584,6 +584,11 @@ def _step_fields(fields: list[T.StructField], node: _Node, ctx: _Ctx) -> list[T.
         gone = set(outs) if ctx.compat else set(ins) | set(outs)
         return ([f for f in fields if f.name not in gone]
                 + [T.StructField(o, types[i], True) for i, o in zip(ins, outs)])
+    if node.kind == "map":
+        # an output that replaces a field keeps its position, as withColumn
+        # does on the native path (_native_map)
+        new = {f.name: f for f in _out_fields(node.out_cols, node.params.get("out_types"))}
+        return [new.pop(f.name, f) for f in fields] + list(new.values())
     kept = [f for f in fields if f.name not in node.out_cols]
     if node.kind == "flat_map" and ctx.compat:
         kept = [T.StructField(f.name, f.dataType, True) if _padded(f.name, node.out_cols, ctx)

@@ -6,14 +6,15 @@ no keyed windows — SURVEY.md §2.2) and that the north_rule requires.
 
 Design notes (scale-first):
 
-* ``asof_join`` uses the union-tag + single-window sweep strategy: tag both
-  sides, union, and compute ``last(value, ignorenulls=True)`` over a window
-  partitioned by the join keys and ordered by (ts, side-tag).  This costs
-  exactly ONE shuffle (the window partition), stays entirely JVM-side
-  (whole-stage codegen; zero Python), and AQE handles partition-size skew.
-  A cogrouped `pd.merge_asof` variant exists for very wide right sides
-  (`asof_join_cogroup`) where duplicating right columns through the union
-  would be wasteful.
+* Every as-of join runs ONE sweep (``_asof_sweep``): tag the left and
+  right rows, union, and compute ``last(payload, ignorenulls=True)`` over a
+  window partitioned by the join keys and ordered by (ts, side-tag).  This
+  costs exactly ONE shuffle (the window partition), stays entirely
+  JVM-side (whole-stage codegen; zero Python), and AQE handles
+  partition-size skew. ``asof_join`` (one right side),
+  ``point_in_time_enrich`` (K right sides, one window) and
+  ``asof_join_chunked`` (the sweep also partitioned by a time chunk) are
+  thin callers of it.
 * All window-based ops share one canonical ordering — ``(ts, turn_idx)`` by
   default — so a single sort per stage serves every operator fused into it.
 """
@@ -24,10 +25,11 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 _SRC = "__asof_src"
-_RTS = "__asof_rts"
 _PAY = "__asof_pay"
+_CHUNK = "__asof_chunk"
 
 
 def _as_list(x: str | Sequence[str]) -> list[str]:
@@ -67,14 +69,18 @@ def pandas_epoch_us(tsv) -> "pd.Series":  # noqa: F821
     return tsv.astype("int64") * mult // div
 
 
+def _is_temporal(dt) -> bool:
+    """Timestamp, timestamp_ntz or date: time math runs on exact epoch-µs
+    (:func:`epoch_us`); any other ts type is used as a raw number."""
+    return isinstance(dt, (T.TimestampType, T.TimestampNTZType, T.DateType))
+
+
 def _orderable(dt) -> bool:
     """Conservative recursive check that a type supports Spark ordering —
     the asof payload tie-break and the chunked carry's max/min-struct both
     need it. Arrays/binaries are excluded conservatively (matches the
     historical top-level guard); maps are never orderable; structs recurse
     (a struct<... map ...> is NOT orderable even though its top level is)."""
-    from pyspark.sql import types as T  # noqa: PLC0415
-
     if isinstance(dt, (T.MapType, T.ArrayType, T.BinaryType)):
         return False
     if isinstance(dt, T.StructType):
@@ -87,9 +93,7 @@ def _chunk_id(ts: str, dtype, chunk_seconds: float) -> Column:
     temporal ts columns; for NUMERIC ts columns the raw value is bucketed
     directly (``chunk_seconds`` then shares the column's unit) — plain
     locf/asof support numeric ts, so the chunked variants must too."""
-    from pyspark.sql import types as T  # noqa: PLC0415
-
-    if isinstance(dtype, (T.TimestampType, T.TimestampNTZType, T.DateType)):
+    if _is_temporal(dtype):
         return F.floor(epoch_us(ts) / F.lit(int(chunk_seconds * 1_000_000)))
     return F.floor(F.col(ts).cast("double") / F.lit(float(chunk_seconds)))
 
@@ -97,11 +101,118 @@ def _chunk_id(ts: str, dtype, chunk_seconds: float) -> Column:
 def _time_value(col: Column, dtype) -> Column:
     """Numeric time for tolerance/gap math: µs for timestamps (exact int),
     the raw value for numeric ts columns."""
-    from pyspark.sql import types as T  # noqa: PLC0415
-
-    if isinstance(dtype, (T.TimestampType, T.TimestampNTZType, T.DateType)):
+    if _is_temporal(dtype):
         return epoch_us(col)
     return col.cast("double")
+
+
+def _asof_outputs(left_cols: Sequence[str], sides) -> list[list[tuple[str, str]]]:
+    """Output names of every as-of right side, collisions raised up front
+    with one message. ``sides`` holds one (label, value columns, suffix,
+    matched-ts column or None, fix hint) per right side; returns each
+    side's [(value column, output name)]."""
+    seen = {c: "the left columns" for c in left_cols}
+    out = []
+    for label, rcols, sfx, matched, hint in sides:
+        pairs = [(c, c + sfx) for c in rcols]
+        for o in [o for _, o in pairs] + ([matched] if matched else []):
+            if o in seen:
+                raise ValueError(
+                    f"output column {o!r} from {label} collides with "
+                    f"{seen[o]}; pass {hint} (or rename) to disambiguate")
+            seen[o] = label
+        out.append(pairs)
+    return out
+
+
+def _sweep_window(keys: list[str], ts: str, pay_types: dict, backward: bool,
+                  allow_exact_matches: bool, chunk: str | None = None):
+    """The as-of sweep window and its tie rule. Rows run in time order
+    (reversed for forward); at equal ts a right row (``_SRC=0``) lands in
+    the left row's running frame iff exact matches are allowed. Duplicate
+    right (key, ts) rows then order by their payload struct (lexicographic
+    over its fields), so ``last`` resolves them to the MAX payload backward
+    and the MIN forward — the resolutions the chunked carry's max/min
+    struct can express. Other sides' payloads are NULL on a row, which
+    nulls_first/nulls_last keeps neutral. Unorderable payloads (checked
+    recursively: a struct<... map> fails too) skip the tie-break."""
+    tie = F.col(_SRC).asc() if allow_exact_matches else F.col(_SRC).desc()
+    order = [F.col(ts).asc() if backward else F.col(ts).desc(), tie]
+    order += [F.col(p).asc_nulls_first() if backward else F.col(p).desc_nulls_last()
+              for p, dt in pay_types.items() if _orderable(dt)]
+    return (
+        Window.partitionBy(*keys, *([chunk] if chunk else []))
+        .orderBy(*order)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+
+
+def _asof_sweep(left: DataFrame, sides: dict, keys: list[str], ts: str,
+                allow_exact_matches: bool, sweeps: dict[str, bool],
+                chunk_seconds: float | None = None) -> tuple[DataFrame, DataFrame]:
+    """The one as-of sweep behind asof_join, asof_join_chunked and
+    point_in_time_enrich.
+
+    Union-tag frame: left rows carry ``_SRC=1``; each right side
+    (``sides``: payload column -> (frame, [(value column, output name)]))
+    contributes keys, ts, ``_SRC=0`` and ONE struct payload (``__rts``,
+    outputs...), so a match attaches the nearest right row ATOMICALLY
+    (per-column ignorenulls fills would skip a null inside the nearest row
+    and mix columns of different rows). Every other column is NULL-cast on
+    each side. ``chunk_seconds`` adds the value-based ``_CHUNK`` column,
+    which then also partitions the sweep.
+
+    Returns the union and the swept frame: the union with each payload
+    ``p`` replaced by ``p + suffix`` = ``last(p, ignorenulls)`` over the
+    :func:`_sweep_window` of each ``sweeps`` item (suffix -> backward). All
+    payloads of one direction share ONE window spec, so K sides plan one
+    WindowExec; two directions share the exchange and sort twice."""
+    kts = set(keys) | {ts}
+    extra = [c for c in left.columns if c not in kts]
+    projs = {
+        p: rdf.select(*keys, ts, F.lit(0).alias(_SRC), F.struct(
+            F.col(ts).alias("__rts"), *[F.col(c).alias(o) for c, o in pairs]
+        ).alias(p))
+        for p, (rdf, pairs) in sides.items()
+    }
+    pay_types = {p: proj.schema[p].dataType for p, proj in projs.items()}
+    u = left.select(*keys, ts, F.lit(1).alias(_SRC), *extra, *[
+        F.lit(None).cast(dt).alias(p) for p, dt in pay_types.items()])
+    for p, proj in projs.items():
+        u = u.unionByName(proj.select(
+            *keys, ts, _SRC,
+            *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in extra],
+            *[q if q == p else F.lit(None).cast(dt).alias(q)
+              for q, dt in pay_types.items()]))
+    chunk = None
+    if chunk_seconds is not None:
+        chunk = _CHUNK
+        u = u.withColumn(chunk, _chunk_id(ts, u.schema[ts].dataType, chunk_seconds))
+    windows = {sfx: _sweep_window(keys, ts, pay_types, backward,
+                                  allow_exact_matches, chunk)
+               for sfx, backward in sweeps.items()}
+    swept = u.select(
+        *[c for c in u.columns if c not in pay_types],
+        *[F.last(p, ignorenulls=True).over(w).alias(p + sfx)
+          for sfx, w in windows.items() for p in pay_types])
+    return u, swept
+
+
+def _tolerance_gate(pay: Column, ts: str, ts_type, tolerance: float | None,
+                    backward: bool) -> Column:
+    """The matched payload, NULL when the left row's ts or the matched ts is
+    NULL (a NULL ts never matches, as in DuckDB's ASOF JOIN) or when their
+    distance in time direction exceeds ``tolerance`` (seconds; ts units for
+    numeric ts)."""
+    rts = pay["__rts"]
+    ok = rts.isNotNull() & F.col(ts).isNotNull()
+    if tolerance is not None:
+        tl, tr = _time_value(F.col(ts), ts_type), _time_value(rts, ts_type)
+        # round, not int(): 1.001 * 1e6 is 1000999.99…
+        lim = (F.lit(int(round(tolerance * 1_000_000))) if _is_temporal(ts_type)
+               else F.lit(float(tolerance)))
+        ok = ok & (((tl - tr) if backward else (tr - tl)) <= lim)
+    return F.when(ok, pay)
 
 
 def asof_join(
@@ -125,7 +236,8 @@ def asof_join(
     closer, equal distances resolving BACKWARD (the pd.merge_asof rule;
     ``tolerance`` bounds the ABSOLUTE distance and each side is ruled out
     independently before the pick). ``tolerance`` (seconds) nulls the match
-    when the time distance exceeds it.  Semantics mirror ``pd.merge_asof``.
+    when the time distance exceeds it.  Semantics mirror ``pd.merge_asof``;
+    a row with a NULL ts never matches.
 
     The nearest right row is attached ATOMICALLY (a null in the matched row
     stays null — no stale per-column fill). Ties on duplicate right (key, ts)
@@ -134,7 +246,7 @@ def asof_join(
     chunked variant's struct carry can reproduce); keep the right side
     unique per (key, ts) for oracle-exact results.
 
-    Implementation: union-tag + one struct-payload window sweep — one
+    Implementation: the union-tag sweep (:func:`_asof_sweep`) — one
     shuffle, one sort, no Python ('nearest' runs BOTH sweeps over the one
     union — same exchange, two sorts — and picks per row by exact-µs
     distance).
@@ -146,176 +258,29 @@ def asof_join(
     rcols = list(right_cols) if right_cols else [
         c for c in right.columns if c not in set(keys) | {ts}
     ]
-    out_names = {c: c + suffix for c in rcols}
-    lcols = left.columns
-    clash = [out_names[c] for c in rcols if out_names[c] in lcols]
-    if clash:
-        raise ValueError(
-            f"right value columns collide with left columns: {clash}; "
-            "pass suffix='_r' (or rename) to disambiguate"
-        )
-    ts_type = right.schema[ts].dataType
-
-    # The right row travels as ONE struct payload (matched ts first, then the
-    # value columns) so the sweep attaches the nearest right row ATOMICALLY:
-    # per-column ignorenulls fills would skip a null inside the nearest row
-    # and pull stale values from older rows (pd.merge_asof keeps the nearest
-    # row's own nulls), and could mix columns from different right rows.
-    pay = F.struct(
-        F.col(ts).alias("__rts"), *[F.col(c).alias(out_names[c]) for c in rcols]
-    )
-    rhs = right.select(*[F.col(k) for k in keys], F.col(ts),
-                       F.lit(0).alias(_SRC), pay.alias(_PAY))
-    for c in lcols:
-        if c not in set(keys) | {ts}:
-            rhs = rhs.withColumn(c, F.lit(None).cast(left.schema[c].dataType))
-    lhs = (
-        left.withColumn(_SRC, F.lit(1))
-        .withColumn(_PAY, F.lit(None).cast(rhs.schema[_PAY].dataType))
-    )
-    cols = [*keys, ts, _SRC, _PAY, *[c for c in lcols if c not in set(keys) | {ts}]]
-    u = lhs.select(*cols).unionByName(rhs.select(*cols))
-
-    # Ordering: at equal ts, the right row must land in the left row's
-    # preceding frame iff exact matches are allowed. The payload struct is
-    # the deterministic tie-break among duplicate right (key, ts) rows
-    # (struct comparison is lexicographic over its fields).
-    from pyspark.sql import types as T  # noqa: PLC0415
-
-    def _sweep_payload(asc: bool):
-        tie = F.col(_SRC).asc() if allow_exact_matches else F.col(_SRC).desc()
-        order = [F.col(ts).asc() if asc else F.col(ts).desc(), tie]
-        # struct tie-break only when orderable — RECURSIVELY: a struct<...map>
-        # payload field passes a top-level isinstance check but still breaks
-        # the orderBy (code-review finding)
-        if _orderable(rhs.schema[_PAY].dataType):
-            # direction-dependent: backward resolves duplicate right (key, ts)
-            # rows to the MAX payload, forward to the MIN — the resolutions a
-            # single max/min-struct carry can express, keeping asof_join and
-            # asof_join_chunked identical on duplicate ties
-            order.append(F.col(_PAY).asc_nulls_first() if asc
-                         else F.col(_PAY).desc_nulls_last())
-        w = (
-            Window.partitionBy(*keys)
-            .orderBy(*order)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        return F.last(_PAY, ignorenulls=True).over(w)
-
-    base_cols = [c for c in u.columns if c != _PAY]
-    is_time = isinstance(
-        ts_type, (T.TimestampType, T.TimestampNTZType, T.DateType))
-    tol = None
-    if tolerance is not None:
-        tol = (F.lit(int(tolerance * 1_000_000)) if is_time
-               else F.lit(float(tolerance)))
-
+    (pairs,) = _asof_outputs(left.columns, [
+        ("the right frame", rcols, suffix, matched_ts_col, "suffix='_r'")])
+    sweeps = ({"_b": True, "_f": False} if direction == "nearest"
+              else {"": direction == "backward"})
+    _, swept = _asof_sweep(left, {_PAY: (right, pairs)}, keys, ts,
+                           allow_exact_matches, sweeps)
+    ts_type = swept.schema[ts].dataType
     if direction != "nearest":
-        filled = u.select(
-            *base_cols, _sweep_payload(direction == "backward").alias(_PAY))
-        res = filled.filter(F.col(_SRC) == 1) \
-            .withColumn(_RTS, F.col(_PAY)["__rts"])
-        if tol is not None:
-            tl = _time_value(F.col(ts), ts_type)
-            tr = _time_value(F.col(_RTS), ts_type)
-            dist = (tl - tr) if direction == "backward" else (tr - tl)
-            ok = F.col(_RTS).isNotNull() & (dist <= tol)
-            res = res.withColumn(_PAY, F.when(ok, F.col(_PAY))) \
-                .withColumn(_RTS, F.when(ok, F.col(_RTS)))
+        pay = _tolerance_gate(F.col(_PAY), ts, ts_type, tolerance,
+                              direction == "backward")
     else:
-        # BOTH sweeps share the union and the key partitioning — one
-        # exchange, two sorts; the pick is exact integer µs distance with
-        # equal distances resolving backward (pd.merge_asof's rule), each
-        # side tolerance-ruled independently BEFORE the pick
-        filled = u.select(
-            *base_cols,
-            _sweep_payload(True).alias("__pb"),
-            _sweep_payload(False).alias("__pf"),
-        )
-        res = filled.filter(F.col(_SRC) == 1)
+        # each side is tolerance-ruled BEFORE the pick; the pick is exact
+        # µs distance, equal distances resolving backward
+        pb = _tolerance_gate(F.col(_PAY + "_b"), ts, ts_type, tolerance, True)
+        pf = _tolerance_gate(F.col(_PAY + "_f"), ts, ts_type, tolerance, False)
         tl = _time_value(F.col(ts), ts_type)
-        db = tl - _time_value(F.col("__pb")["__rts"], ts_type)
-        df_ = _time_value(F.col("__pf")["__rts"], ts_type) - tl
-        b_ok = F.col("__pb").isNotNull() & (
-            (db <= tol) if tol is not None else F.lit(True))
-        f_ok = F.col("__pf").isNotNull() & (
-            (df_ <= tol) if tol is not None else F.lit(True))
-        chosen = (
-            F.when(b_ok & (~f_ok | (db <= df_)), F.col("__pb"))
-            .when(f_ok, F.col("__pf"))
-        )
-        res = (
-            res.withColumn(_PAY, chosen)
-            .withColumn(_RTS, F.col(_PAY)["__rts"])
-            .drop("__pb", "__pf")
-        )
-    res = res.select(
-        "*", *[F.col(_PAY)[out_names[c]].alias(out_names[c]) for c in rcols])
-
-    keep = lcols + [out_names[c] for c in rcols]
-    if matched_ts_col:
-        res = res.withColumn(matched_ts_col, F.col(_RTS))
-        keep.append(matched_ts_col)
-    return res.select(*keep)
-
-
-def asof_join_cogroup(
-    left: DataFrame,
-    right: DataFrame,
-    on: str | Sequence[str] = "conv_id",
-    ts: str = "ts",
-    direction: str = "backward",
-    tolerance: float | None = None,
-    allow_exact_matches: bool = True,
-) -> DataFrame:
-    """As-of join via ``cogroup().applyInPandas`` running ``pd.merge_asof``
-    per key group (Arrow-batched, never per-row Python).
-
-    Preferable to :func:`asof_join` when the right side is very wide (the
-    union-tag sweep materializes right columns across the whole union) or
-    when exact pandas tie semantics are required. One shuffle per side.
-    """
-    import pandas as pd  # noqa: PLC0415 — imported on driver & executors
-
-    from pyspark.sql import types as T  # noqa: PLC0415
-
-    keys = _as_list(on)
-    rcols = [c for c in right.columns if c not in set(keys) | {ts}]
-    out_schema = T.StructType(
-        list(left.schema.fields)
-        + [T.StructField(f.name, f.dataType, True) for f in right.schema.fields if f.name in rcols]
-    )
-    lcols = left.columns
-    ts_is_time = isinstance(
-        right.schema[ts].dataType, (T.TimestampType, T.TimestampNTZType, T.DateType)
-    )
-    # pd.merge_asof needs the tolerance in the ON column's own type:
-    # Timedelta for datetimes, a plain number for numeric ts columns
-    tol = None
-    if tolerance is not None:
-        tol = pd.Timedelta(seconds=tolerance) if ts_is_time else tolerance
-
-    def merge(ldf: pd.DataFrame, rdf: pd.DataFrame) -> pd.DataFrame:
-        if ldf.empty:
-            return pd.DataFrame(columns=lcols + rcols)
-        ldf = ldf.sort_values(ts, kind="mergesort")
-        rdf = rdf.sort_values(ts, kind="mergesort")
-        out = pd.merge_asof(
-            ldf,
-            rdf[keys + [ts] + rcols] if not rdf.empty else rdf,
-            on=ts,
-            by=keys,
-            direction=direction,
-            tolerance=tol,
-            allow_exact_matches=allow_exact_matches,
-        )
-        return out[lcols + rcols]
-
-    return (
-        left.groupBy(*keys)
-        .cogroup(right.groupBy(*keys))
-        .applyInPandas(merge, schema=out_schema)
-    )
+        db = tl - _time_value(pb["__rts"], ts_type)
+        df_ = _time_value(pf["__rts"], ts_type) - tl
+        pay = F.when(pf.isNull() | (db <= df_), pb).otherwise(pf)
+    res = swept.filter(F.col(_SRC) == 1).withColumn(_PAY, pay)
+    matched = [F.col(_PAY)["__rts"].alias(matched_ts_col)] if matched_ts_col else []
+    return res.select(*left.columns,
+                      *[F.col(_PAY)[o].alias(o) for _, o in pairs], *matched)
 
 
 def _order_window(key: str | Sequence[str], order: str | Sequence[str]):
@@ -407,10 +372,7 @@ def sessionize(
     w = Window.partitionBy(*keys).orderBy(ts, *order_extra)
     # exact integer µs for timestamps (oracle-parity-safe; float epoch-seconds
     # carries 16 significant digits — off-by-ulp at gap boundaries)
-    from pyspark.sql import types as T  # noqa: PLC0415
-
-    if isinstance(df.schema[ts].dataType,
-                  (T.TimestampType, T.TimestampNTZType, T.DateType)):
+    if _is_temporal(df.schema[ts].dataType):
         tcol, gap_v = epoch_us(ts), F.lit(int(gap * 1_000_000))
     else:
         tcol, gap_v = F.col(ts).cast("double"), F.lit(float(gap))
@@ -594,11 +556,9 @@ def sessionize_chunked(
     prefix-sums the session counts; rows then combine carried base + local
     running sum. Ties always share a chunk (floor bucketing). Same results
     as :func:`sessionize`; two shuffles + one carry join."""
-    from pyspark.sql import types as T  # noqa: PLC0415
-
     keys = _as_list(key)
     dtype = df.schema[ts].dataType
-    if isinstance(dtype, (T.TimestampType, T.TimestampNTZType, T.DateType)):
+    if _is_temporal(dtype):
         tcol, gap_v = epoch_us(ts), F.lit(int(gap * 1_000_000))
     else:
         tcol, gap_v = F.col(ts).cast("double"), F.lit(float(gap))
@@ -811,90 +771,41 @@ def asof_join_chunked(
     rcols = list(right_cols) if right_cols else [
         c for c in right.columns if c not in set(keys) | {ts}
     ]
-    out_names = {c: c + suffix for c in rcols}
-    lcols = left.columns
-    clash = [out_names[c] for c in rcols if out_names[c] in lcols]
-    if clash:
-        raise ValueError(
-            f"right value columns collide with left columns: {clash}; pass suffix="
-        )
-    ts_type = right.schema[ts].dataType
-    chunk = "__asof_chunk"
-
-    pay = F.struct(F.col(ts).alias("__rts"),
-                   *[F.col(c).alias(out_names[c]) for c in rcols])
-    rhs = right.select(*[F.col(k) for k in keys], F.col(ts),
-                       F.lit(0).alias(_SRC), pay.alias(_PAY))
-    for c in lcols:
-        if c not in set(keys) | {ts}:
-            rhs = rhs.withColumn(c, F.lit(None).cast(left.schema[c].dataType))
-    lhs = (left.withColumn(_SRC, F.lit(1))
-           .withColumn(_PAY, F.lit(None).cast(rhs.schema[_PAY].dataType)))
-    cols = [*keys, ts, _SRC, _PAY, *[c for c in lcols if c not in set(keys) | {ts}]]
-    if not _orderable(rhs.schema[_PAY].dataType):
+    (pairs,) = _asof_outputs(left.columns, [
+        ("the right frame", rcols, suffix, None, "suffix='_r'")])
+    backward = direction == "backward"
+    u, swept = _asof_sweep(left, {_PAY: (right, pairs)}, keys, ts,
+                           allow_exact_matches, {"": backward}, chunk_seconds)
+    if not _orderable(u.schema[_PAY].dataType):
         raise ValueError(
             "asof_join_chunked requires ORDERABLE right value columns (no "
             "arrays/maps/binaries): the order-independent cross-chunk carry "
             "is a max/min over (ts, payload) structs. Use asof_join for "
             "unorderable payloads."
         )
-    u = lhs.select(*cols).unionByName(rhs.select(*cols))
-    u = u.withColumn(chunk, _chunk_id(ts, ts_type, chunk_seconds))
-
-    asc = direction == "backward"
-    tie = F.col(_SRC).asc() if allow_exact_matches else F.col(_SRC).desc()
-    # payload tie-break mirrors asof_join exactly (backward→max payload,
-    # forward→min): the carry's max/min-struct makes the same choice, so
-    # duplicate right (key, ts) rows resolve identically on both paths
-    order = [F.col(ts).asc() if asc else F.col(ts).desc(), tie,
-             F.col(_PAY).asc_nulls_first() if asc
-             else F.col(_PAY).desc_nulls_last()]
-    w_local = (
-        Window.partitionBy(*keys, chunk)
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    filled = u.select(
-        *[c for c in u.columns if c != _PAY],
-        F.last(_PAY, ignorenulls=True).over(w_local).alias(_PAY),
-    )
 
     # cross-chunk carry: per (key, chunk) the extreme right payload
     # (latest for backward, earliest for forward) — order-independent
-    # max/min over (ts, payload) structs of RIGHT rows only.
+    # max/min over (ts, payload) structs of RIGHT rows only, the same
+    # choice the sweep's tie rule makes among duplicate (key, ts) rows.
     rext = F.when(F.col(_SRC) == 0, F.struct(F.col(ts).alias("o"), F.col(_PAY).alias("p")))
-    ext = (F.max(rext) if asc else F.min(rext))["p"].alias("__ext")
-    chunk_ext = u.groupBy(*keys, chunk).agg(ext)
+    ext = (F.max(rext) if backward else F.min(rext))["p"].alias("__ext")
+    chunk_ext = u.groupBy(*keys, _CHUNK).agg(ext)
     w_carry = (
         Window.partitionBy(*keys)
-        .orderBy(F.col(chunk).asc() if asc else F.col(chunk).desc())
+        .orderBy(F.col(_CHUNK).asc() if backward else F.col(_CHUNK).desc())
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     carry = chunk_ext.select(
-        *keys, chunk,
+        *keys, _CHUNK,
         F.last("__ext", ignorenulls=True).over(w_carry).alias("__carry"),
     )
 
-    res = (
-        carry_join(filled.filter(F.col(_SRC) == 1), carry, keys + [chunk],
-                   broadcast=broadcast_carry)
-        .withColumn(_PAY, F.coalesce(F.col(_PAY), F.col("__carry")))
-        .drop("__carry", chunk)
-        .withColumn(_RTS, F.col(_PAY)["__rts"])
-        .select("*", *[F.col(_PAY)[out_names[c]].alias(out_names[c]) for c in rcols])
-    )
-    if tolerance is not None:
-        from pyspark.sql import types as T  # noqa: PLC0415
-
-        is_time = isinstance(ts_type, (T.TimestampType, T.TimestampNTZType, T.DateType))
-        tl = _time_value(F.col(ts), ts_type)
-        tr = _time_value(F.col(_RTS), ts_type)
-        tol = F.lit(int(tolerance * 1_000_000)) if is_time else F.lit(float(tolerance))
-        dist = (tl - tr) if direction == "backward" else (tr - tl)
-        ok = F.col(_RTS).isNotNull() & (dist <= tol)
-        for c in rcols:
-            res = res.withColumn(out_names[c], F.when(ok, F.col(out_names[c])))
-    return res.select(*lcols, *[out_names[c] for c in rcols])
+    pay = _tolerance_gate(F.coalesce(F.col(_PAY), F.col("__carry")), ts,
+                          u.schema[ts].dataType, tolerance, backward)
+    res = carry_join(swept.filter(F.col(_SRC) == 1), carry, keys + [_CHUNK],
+                     broadcast=broadcast_carry).withColumn(_PAY, pay)
+    return res.select(*left.columns, *[F.col(_PAY)[o].alias(o) for _, o in pairs])
 
 
 # --------------------------------------------------------------------------
@@ -995,8 +906,6 @@ def range_agg(
     _window.py) aggregates a stream into fixed windows; `range_agg` is the
     as-of-anchored generalization the north rule's feature vectors need.
     """
-    from pyspark.sql import types as T  # noqa: PLC0415
-
     if not aggs:
         raise ValueError("range_agg: aggs= is required (name -> (fn, col))")
     specs = _range_specs(aggs)
@@ -1007,8 +916,7 @@ def range_agg(
         raise ValueError("range_agg: window_seconds must be > 0")
     e_dtype = events.schema[ts].dataType
     s_dtype = spine.schema[s_ts].dataType
-    is_time = isinstance(
-        e_dtype, (T.TimestampType, T.TimestampNTZType, T.DateType))
+    is_time = _is_temporal(e_dtype)
 
     if impl == "window":
         if chunk_seconds is not None:
@@ -1016,8 +924,7 @@ def range_agg(
                 "range_agg: chunk_seconds= is the prefix impl's hot-key "
                 "path (a value-range window frame cannot chunk); use "
                 "impl='prefix'")
-        if not is_time or not isinstance(
-                s_dtype, (T.TimestampType, T.TimestampNTZType, T.DateType)):
+        if not is_time or not _is_temporal(s_dtype):
             raise ValueError(
                 "range_agg(impl='window') needs temporal ts columns on both "
                 "sides (exact µs frame bounds); use impl='prefix' for "
@@ -1084,8 +991,6 @@ def multi_range_agg(
     per horizon, re-reading the stream each time. One shared sweep is the
     Spark-first re-expression.
     """
-    from pyspark.sql import types as T  # noqa: PLC0415
-
     if not aggs:
         raise ValueError(
             "multi_range_agg: aggs= is required (name -> (fn, col))")
@@ -1104,8 +1009,7 @@ def multi_range_agg(
         wins.append((str(wname), w))
     for dt, side in ((events.schema[ts].dataType, "events"),
                      (spine.schema[s_ts].dataType, "spine")):
-        if not isinstance(dt, (T.TimestampType, T.TimestampNTZType,
-                               T.DateType)):
+        if not _is_temporal(dt):
             raise ValueError(
                 f"multi_range_agg needs a temporal ts column on the {side} "
                 "side (exact µs frame bounds); for numeric ts run "
@@ -1155,8 +1059,6 @@ def future_agg(
     * ``impl="prefix"`` — O(n log n) flat in horizon width; needs
       ``spine_id=``; count/sum/avg only; ``chunk_seconds=`` chunks the
       hot-key sweep exactly like range_agg's."""
-    from pyspark.sql import types as T  # noqa: PLC0415
-
     if not aggs:
         raise ValueError("future_agg: aggs= is required (name -> (fn, col))")
     specs = _range_specs(aggs)
@@ -1167,8 +1069,7 @@ def future_agg(
         raise ValueError("future_agg: horizon_seconds must be > 0")
     for dt, side in ((events.schema[ts].dataType, "events"),
                      (spine.schema[s_ts].dataType, "spine")):
-        if not isinstance(dt, (T.TimestampType, T.TimestampNTZType,
-                               T.DateType)):
+        if not _is_temporal(dt):
             raise ValueError(
                 f"future_agg needs a temporal ts column on the {side} side "
                 "(exact µs frame bounds)")
@@ -1243,7 +1144,6 @@ def range_quantile(
     integer histogram buckets (drift_psi's binning) and take the
     histogram quantile instead."""
     from fractions import Fraction  # noqa: PLC0415
-    from pyspark.sql import types as T  # noqa: PLC0415
 
     qdict = {"quantile": qs} if isinstance(qs, (int, float)) else dict(qs)
     if not qdict:
@@ -1264,8 +1164,7 @@ def range_quantile(
     s_ts = spine_ts or ts
     for dt, side in ((events.schema[ts].dataType, "events"),
                      (spine.schema[s_ts].dataType, "spine")):
-        if not isinstance(dt, (T.TimestampType, T.TimestampNTZType,
-                               T.DateType)):
+        if not _is_temporal(dt):
             raise ValueError(
                 f"range_quantile needs a temporal ts column on the {side} "
                 "side (exact µs frame bounds)")
@@ -1361,11 +1260,8 @@ def _range_agg_window(spine, events, keys, ts, s_ts, w, specs,
 def _range_agg_prefix(spine, events, keys, ts, s_ts, w, specs,
                       include_current, sid, broadcast_result,
                       chunk_seconds=None, broadcast_carry=True):
-    from pyspark.sql import types as T  # noqa: PLC0415
-
     e_dtype = events.schema[ts].dataType
-    is_time = isinstance(
-        e_dtype, (T.TimestampType, T.TimestampNTZType, T.DateType))
+    is_time = _is_temporal(e_dtype)
     w_off = F.lit(int(round(w * 1_000_000))) if is_time else F.lit(float(w))
 
     # per-event contributions: for every agg a value sum and a non-null
@@ -1509,7 +1405,7 @@ def point_in_time_enrich(
     as of each spine timestamp) without K sequential :func:`asof_join`
     passes, which would cost K shuffles and K sorts of the spine.
 
-    Mechanics: the union-tag sweep generalized to K right sides. Every
+    Mechanics: :func:`_asof_sweep` with K right sides. Every
     feature table contributes its rows with ONE struct payload column
     (matched ts + value columns, NULL on all other sources); a single
     window pass partitioned by key and ordered by (ts, side-tag) computes
@@ -1538,7 +1434,6 @@ def point_in_time_enrich(
     if not features:
         raise ValueError("point_in_time_enrich: features= is empty")
     keys = _as_list(on)
-    lcols = spine.columns
     sfx = suffixes or {}
     tol = tolerances or {}
     unknown = [n for n in list(sfx) + list(tol) if n not in features]
@@ -1546,109 +1441,31 @@ def point_in_time_enrich(
         raise ValueError(
             f"point_in_time_enrich: suffixes/tolerances name(s) {unknown} "
             f"not in features {sorted(features)}")
-
-    # resolve output names and validate collisions up front
-    out_map: dict[str, list[tuple[str, str]]] = {}
-    seen = {c: "spine" for c in lcols}
-    for name, fdf in features.items():
-        rcols = [c for c in fdf.columns if c not in set(keys) | {ts}]
-        if not rcols:
-            raise ValueError(
-                f"point_in_time_enrich: feature table {name!r} has no "
-                f"value columns beyond {keys}+{ts}")
-        pairs = []
-        for c in rcols:
-            o = c + sfx.get(name, "")
-            if o in seen:
-                raise ValueError(
-                    f"point_in_time_enrich: output column {o!r} from table "
-                    f"{name!r} collides with {seen[o]}; pass "
-                    f"suffixes={{{name!r}: '_{name}'}} (or rename)")
-            seen[o] = f"table {name!r}"
-            pairs.append((c, o))
-        if matched_ts:
-            o = f"{name}_ts"
-            if o in seen:
-                raise ValueError(
-                    f"point_in_time_enrich: matched-ts column {o!r} "
-                    f"collides with {seen[o]}")
-            seen[o] = f"table {name!r} (matched ts)"
-        out_map[name] = pairs
-
     names = list(features)
+    rcols = {n: [c for c in features[n].columns if c not in set(keys) | {ts}]
+             for n in names}
+    for n in names:
+        if not rcols[n]:
+            raise ValueError(
+                f"point_in_time_enrich: feature table {n!r} has no "
+                f"value columns beyond {keys}+{ts}")
+    outs = _asof_outputs(spine.columns, [
+        (f"table {n!r}", rcols[n], sfx.get(n, ""),
+         f"{n}_ts" if matched_ts else None, f"suffixes={{{n!r}: '_{n}'}}")
+        for n in names])
+
     paycol = {n: f"__pte_pay_{i}" for i, n in enumerate(names)}
-
-    # each source frame projected to the shared union schema
-    frames = []
-    pay_types = {}
-    for name in names:
-        fdf = features[name]
-        pay = F.struct(
-            F.col(ts).alias("__rts"),
-            *[F.col(c).alias(o) for c, o in out_map[name]])
-        proj = fdf.select(
-            *[F.col(k) for k in keys], F.col(ts),
-            F.lit(0).alias(_SRC), pay.alias(paycol[name]))
-        pay_types[name] = proj.schema[paycol[name]].dataType
-        frames.append((name, proj))
-
-    sp_extra = [c for c in lcols if c not in set(keys) | {ts}]
-    wide = []
-    for name, proj in frames:
-        w = proj
-        for c in sp_extra:
-            w = w.withColumn(c, F.lit(None).cast(spine.schema[c].dataType))
-        for other in names:
-            if other != name:
-                w = w.withColumn(
-                    paycol[other], F.lit(None).cast(pay_types[other]))
-        wide.append(w)
-    sp = spine.withColumn(_SRC, F.lit(1))
-    for name in names:
-        sp = sp.withColumn(paycol[name], F.lit(None).cast(pay_types[name]))
-    cols = [*keys, ts, _SRC, *sp_extra, *[paycol[n] for n in names]]
-    u = sp.select(*cols)
-    for w in wide:
-        u = u.unionByName(w.select(*cols))
-
-    tie = F.col(_SRC).asc() if allow_exact_matches else F.col(_SRC).desc()
-    order: list = [F.col(ts).asc(), tie]
-    for name in names:
-        if _orderable(pay_types[name]):
-            # duplicate (key, ts) rows within one table -> MAX payload,
-            # exactly asof_join backward; other tables' payloads are NULL
-            # on those rows, so nulls_first keeps them neutral in the sort
-            order.append(F.col(paycol[name]).asc_nulls_first())
-    sweep = (
-        Window.partitionBy(*keys).orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    filled = u.select(
-        *[c for c in u.columns if c not in paycol.values()],
-        *[F.last(paycol[n], ignorenulls=True).over(sweep).alias(paycol[n])
-          for n in names])
-
-    res = filled.filter(F.col(_SRC) == 1)
-    ts_type = spine.schema[ts].dataType
-    from pyspark.sql import types as T  # noqa: PLC0415
-
-    is_time = isinstance(
-        ts_type, (T.TimestampType, T.TimestampNTZType, T.DateType))
-    keep = list(lcols)
-    for name in names:
-        rts = F.col(paycol[name])["__rts"]
-        ok = rts.isNotNull()
-        if name in tol:
-            dist = _time_value(F.col(ts), ts_type) - _time_value(rts, ts_type)
-            lim = (F.lit(int(tol[name] * 1_000_000)) if is_time
-                   else F.lit(float(tol[name])))
-            ok = ok & (dist <= lim)
-        for c, o in out_map[name]:
-            res = res.withColumn(o, F.when(ok, F.col(paycol[name])[o]))
-            keep.append(o)
+    _, swept = _asof_sweep(
+        spine, {paycol[n]: (features[n], pairs) for n, pairs in zip(names, outs)},
+        keys, ts, allow_exact_matches, {"": True})
+    ts_type = swept.schema[ts].dataType
+    cols = list(spine.columns)
+    for n, pairs in zip(names, outs):
+        pay = _tolerance_gate(F.col(paycol[n]), ts, ts_type, tol.get(n), True)
+        cols += [pay[o].alias(o) for _, o in pairs]
         if matched_ts:
-            res = res.withColumn(f"{name}_ts", F.when(ok, rts))
-            keep.append(f"{name}_ts")
-    return res.select(*keep)
+            cols.append(pay["__rts"].alias(f"{n}_ts"))
+    return swept.filter(F.col(_SRC) == 1).select(*cols)
 
 
 # --------------------------------------------------------------------------
@@ -1700,8 +1517,6 @@ def interval_join(
     Interval value columns keep their names + ``suffix``; collisions with
     event columns raise up front.
     """
-    from pyspark.sql import types as T  # noqa: PLC0415
-
     if how not in ("inner", "left"):
         raise ValueError(f"interval_join: how must be inner|left, got {how!r}")
     if closed not in ("both", "left", "right", "neither"):
@@ -1944,8 +1759,6 @@ def resample_grid(
     ``ts`` must be a timestamp column (epoch-µs math); a numeric ts
     would need a unit convention — convert upstream.
     """
-    from pyspark.sql import types as T  # noqa: PLC0415
-
     if method not in ("linear", "locf"):
         raise ValueError(f"resample_grid: method must be linear|locf, got {method!r}")
     if every <= 0:
@@ -1953,7 +1766,7 @@ def resample_grid(
     keys = _as_list(by)
     vals = _as_list(values)
     dtype = df.schema[ts].dataType
-    if not isinstance(dtype, (T.TimestampType, T.TimestampNTZType, T.DateType)):
+    if not _is_temporal(dtype):
         raise ValueError(
             f"resample_grid: ts column {ts!r} must be a timestamp "
             f"(got {dtype.simpleString()}) — numeric time axes need a unit "
@@ -2128,10 +1941,8 @@ def _int_time(df: DataFrame, col: str, op: str) -> Column:
     columns, the raw value for integral numerics. Fractional numeric ts
     would silently truncate under cast('long') — rejected loudly (the
     asof_join_chunked unorderable-payload convention)."""
-    from pyspark.sql import types as T  # noqa: PLC0415
-
     dt = df.schema[col].dataType
-    if isinstance(dt, (T.TimestampType, T.TimestampNTZType, T.DateType)):
+    if _is_temporal(dt):
         return epoch_us(F.col(col))
     if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
         return F.col(col).cast("long")
@@ -2395,10 +2206,7 @@ def range_zscore(
         raise ValueError("range_zscore: window_seconds must be > 0")
     if min_n < 1:
         raise ValueError("range_zscore: min_n must be >= 1")
-    from pyspark.sql import types as T  # noqa: PLC0415
-
-    if not isinstance(df.schema[ts].dataType,
-                      (T.TimestampType, T.TimestampNTZType, T.DateType)):
+    if not _is_temporal(df.schema[ts].dataType):
         raise ValueError("range_zscore needs a temporal ts column")
     keys = _as_list(on)
     dec = "decimal(38,0)"
@@ -2465,13 +2273,10 @@ def expanding_agg(
     exchange + tiny carry agg). Temporal ts only — the strict bound
     needs an exact −1 µs frame offset. NULL-ts rows report an empty
     history (count 0, NULL aggregates) and never enter any baseline."""
-    from pyspark.sql import types as T  # noqa: PLC0415
-
     if not aggs:
         raise ValueError("expanding_agg: aggs= is required (name -> (fn, col))")
     specs = _range_specs(aggs)
-    if not isinstance(df.schema[ts].dataType,
-                      (T.TimestampType, T.TimestampNTZType, T.DateType)):
+    if not _is_temporal(df.schema[ts].dataType):
         raise ValueError("expanding_agg needs a temporal ts column")
     keys = _as_list(on)
     hi = 0 if include_current else -1
@@ -2599,10 +2404,7 @@ def session_features(
                      order_extra=extras, out=session_col, seq_out=seq_col)
     w = Window.partitionBy(*keys, seq_col).orderBy(F.col(ts), *extras)
     t_us = epoch_us(ts)
-    from pyspark.sql import types as T  # noqa: PLC0415
-
-    if not isinstance(df.schema[ts].dataType,
-                      (T.TimestampType, T.TimestampNTZType, T.DateType)):
+    if not _is_temporal(df.schema[ts].dataType):
         t_us = F.col(ts)
     start = F.min(t_us).over(
         Window.partitionBy(*keys, seq_col)
