@@ -427,6 +427,29 @@ def test_future_exact_boundary_semantics(spark):
         assert closed["s"] == 611, impl  # + the as-of-instant event
 
 
+@pytest.mark.parametrize("kw", [
+    {},
+    {"impl": "prefix", "spine_id": ("conv_id", "turn_idx")},
+    {"impl": "prefix", "spine_id": ("conv_id", "turn_idx"), "chunk_seconds": 60.0},
+], ids=["window", "prefix", "prefix_chunked"])
+def test_future_horizon_is_inclusive_at_fractional_seconds(spark, kw):
+    """An event exactly 1.001 s ahead is inside horizon_seconds=1.001 on
+    every impl: the horizon converts to 1,001,000 µs (not 1,000,999.99…).
+    The prefix sweep runs in doubles, which keep that fraction only within
+    about a second of the epoch, so the spine sits on it."""
+    from towhee_spark.temporal import future_agg
+
+    base = datetime.datetime(1970, 1, 1)
+    ev = spark.createDataFrame(
+        [("c", base + datetime.timedelta(microseconds=1_001_000), 1)],
+        "conv_id string, ts timestamp, v long")
+    spine = spark.createDataFrame([("c", 0, base)],
+                                  "conv_id string, turn_idx int, ts timestamp")
+    out = future_agg(spine, ev, horizon_seconds=1.001,
+                     aggs={"n": ("count", "*")}, **kw)
+    assert out.collect()[0]["n"] == 1
+
+
 def test_future_validation(spark, corpus):
     from towhee_spark.temporal import future_agg
 

@@ -893,9 +893,10 @@ def stratified_sample(
     ``chunk_bits=b`` for the hot-key path: rows bucket by the TOP b bits
     of the hash (bucket order == hash order, ties share a bucket), rank
     = local row_number per (stratum, bucket) + an exclusive prefix-sum
-    carry of per-bucket counts (``temporal.chunked_row_number``'s
-    recurrence re-keyed to hash space) — identical output, and the
-    mega-stratum fans out over 2^b tasks. The reference has no sampling
+    carry of per-bucket counts through ``temporal._chunk_carry``
+    (``temporal.chunked_row_number``'s recurrence re-keyed to hash
+    space) — identical output, and the mega-stratum fans out over 2^b
+    tasks. The reference has no sampling
     layer (data selection is upstream of its pipelines,
     data_source.py:24-60)."""
     if isinstance(quotas, int):
@@ -924,29 +925,22 @@ def stratified_sample(
     else:
         if not 1 <= chunk_bits <= 30:
             raise ValueError("stratified_sample: chunk_bits must be in [1, 30]")
-        from towhee_spark.temporal import carry_join  # noqa: PLC0415
+        from towhee_spark.temporal import _chunk_carry  # noqa: PLC0415
 
         out = out.withColumn("__ss_bk", F.shiftright("__ss_h", 60 - chunk_bits))
         w_local = Window.partitionBy(strata_col, "__ss_bk") \
             .orderBy("__ss_h", id_col)
-        counts = out.groupBy(strata_col, "__ss_bk") \
-            .agg(F.count(F.lit(1)).alias("__cnt"))
-        w_off = (
-            Window.partitionBy(strata_col).orderBy("__ss_bk")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        offs = counts.select(
-            strata_col, "__ss_bk",
-            F.coalesce(F.sum("__cnt").over(w_off), F.lit(0)).alias("__off"),
-        )
-        out = carry_join(
+        out = _chunk_carry(
             out.withColumn("__lrn", F.row_number().over(w_local)),
-            offs, [strata_col, "__ss_bk"], broadcast=broadcast_carry,
+            [strata_col], "__ss_bk", [F.count(F.lit(1)).alias("__cnt")],
+            lambda before, _: {
+                "__off": F.coalesce(F.sum("__cnt").over(before), F.lit(0))},
+            source=out, broadcast=broadcast_carry,
         ).withColumn(
             "__ss_rn", (F.col("__off") + F.col("__lrn")).cast("long"),
         ).drop("__ss_bk", "__lrn", "__off")
     out = out.filter(F.col("__ss_rn") <= quota_col)
-    # carry_join puts join keys first — restore the input column order so
+    # the carry join puts join keys first — restore the input column order so
     # both physical paths present the identical schema
     cols = list(df.columns)
     if rank_col is not None:

@@ -17,7 +17,7 @@ temporal family exists to remove — so the prefix sum here is two-level,
 the ``temporal.chunked_row_number`` construction with SUM instead of
 COUNT: hash-bucket the order key's top bits (buckets are uniform by
 construction), run the cumsum per bucket, then carry an exclusive prefix
-of the tiny per-bucket totals back with ``temporal.carry_join``. One
+of the tiny per-bucket totals back with ``temporal._chunk_carry``. One
 bucket shuffle + one ``n_buckets``-row aggregate, no global sort, no
 mega-partition.
 
@@ -33,7 +33,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from towhee_spark.functions.curation import hash60
-from towhee_spark.temporal import carry_join
+from towhee_spark.temporal import _chunk_carry
 
 
 def pack_sequences(
@@ -123,13 +123,11 @@ def pack_sequences(
     # share the identical hashpartitioning(__bkt) exchange, so Spark
     # plans a ReusedExchange instead of a second full corpus scan +
     # re-tokenize (verified in tests/test_plans.py)
-    totals = d.groupBy("__bkt").agg(
-        F.max(F.col("__loff") + F.col("__cnt")).alias("__t"))
-    w_bkt = Window.orderBy("__bkt").rowsBetween(Window.unboundedPreceding, -1)
-    offs = totals.select(
-        "__bkt", F.coalesce(F.sum("__t").over(w_bkt), F.lit(0)).alias("__boff"))
-
-    j = carry_join(d, offs, ["__bkt"], broadcast=broadcast_carry)
+    j = _chunk_carry(
+        d, [], "__bkt", [F.max(F.col("__loff") + F.col("__cnt")).alias("__t")],
+        lambda before, _: {
+            "__boff": F.coalesce(F.sum("__t").over(before), F.lit(0))},
+        broadcast=broadcast_carry)
     j = j.withColumn("__start", F.col("__boff") + F.col("__loff"))
 
     # packs this doc touches: floor(start/L) .. floor((start+cnt-1)/L) —

@@ -276,7 +276,7 @@ def truncate_context(
 
     ``chunk_seconds`` switches to the hot-key path (the temporal chunked
     family): local reverse running sum per (key, time-chunk) + a
-    later-chunk suffix-sum carry joined back via temporal.carry_join —
+    later-chunk suffix-sum carry joined back via temporal._chunk_carry —
     a mega-conversation fans out across chunks instead of serializing
     one task, same results (gated). ``broadcast_carry`` follows the
     carry_join contract (True/False/None = broadcast / shuffled / AQE)."""
@@ -294,22 +294,19 @@ def truncate_context(
                  .withColumn("cum_from_end",
                              F.sum("n_tokens").over(w).cast("long")))
     else:
-        from towhee_spark.temporal import _chunk_id, carry_join  # noqa: PLC0415
+        from towhee_spark.temporal import _carry_chunk, _chunk_carry, _chunk_id  # noqa: PLC0415
 
-        d = df.withColumn("n_tokens", cnt).withColumn(
-            "__tc_ck", _chunk_id(ts, df.schema[ts].dataType, chunk_seconds))
+        d = df.withColumn("n_tokens", cnt).withColumn("__tc_ck", _carry_chunk(
+            _chunk_id(ts, df.schema[ts].dataType, chunk_seconds)))
         w_local = (Window.partitionBy(key, "__tc_ck").orderBy(*rev)
                    .rowsBetween(Window.unboundedPreceding, Window.currentRow))
         local = d.withColumn("__lc", F.sum("n_tokens").over(w_local))
-        # ONE row per (key, chunk); suffix sum of LATER chunks' totals
-        tot = d.groupBy(key, "__tc_ck").agg(F.sum("n_tokens").alias("__t"))
-        w_suf = (Window.partitionBy(key).orderBy(F.col("__tc_ck").desc())
-                 .rowsBetween(Window.unboundedPreceding, -1))
-        carry = tot.select(
-            key, "__tc_ck",
-            F.coalesce(F.sum("__t").over(w_suf), F.lit(0)).alias("__carry"))
-        out = (carry_join(local, carry, [key, "__tc_ck"],
-                          broadcast=broadcast_carry)
+        # suffix sum of LATER chunks' totals
+        out = (_chunk_carry(
+                   local, [key], "__tc_ck", [F.sum("n_tokens").alias("__t")],
+                   lambda _, after: {
+                       "__carry": F.coalesce(F.sum("__t").over(after), F.lit(0))},
+                   source=d, broadcast=broadcast_carry)
                .withColumn("cum_from_end",
                            (F.col("__lc") + F.col("__carry")).cast("long"))
                .drop("__tc_ck", "__lc", "__carry"))

@@ -127,16 +127,11 @@ def suggest_chunk_seconds(
     hot key has zero time span (time-chunking cannot split it; salt with
     :func:`add_salt` instead). For NUMERIC ts columns the returned value is
     in the column's own unit, matching ``temporal._chunk_id``."""
-    from pyspark.sql import types as T  # noqa: PLC0415
-
-    from towhee_spark.temporal import _time_value  # noqa: PLC0415
+    from towhee_spark.temporal import _is_temporal, _time_value  # noqa: PLC0415
 
     dt = df.schema[ts].dataType
     tv = _time_value(F.col(ts), dt)
-    unit_div = (
-        1e6 if isinstance(dt, (T.TimestampType, T.TimestampNTZType, T.DateType))
-        else 1.0
-    )
+    unit_div = 1e6 if _is_temporal(dt) else 1.0
     stats = (
         df.groupBy(key)
         .agg(

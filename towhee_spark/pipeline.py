@@ -1014,46 +1014,36 @@ def _compile_time_window(df: DataFrame, node: _Node, ctx: _Ctx) -> DataFrame:
             # a mega-key fans out across chunks instead of one task.
             # Equal ts always share a chunk (floor bucketing), so tie
             # handling is identical to the global-window path.
-            from towhee_spark.temporal import carry_join  # noqa: PLC0415
+            from towhee_spark.temporal import _carry_chunk, _chunk_carry  # noqa: PLC0415
 
             chunk_ms = float(chunk_s) * 1000
             ckw = Window.partitionBy(*keys, "__ck").orderBy("__ms")
             s0 = (
                 df.withColumn("__ms", ms)
-                .withColumn("__ck", F.floor(F.col("__ms") / F.lit(chunk_ms)).cast("long"))
+                .withColumn("__ck", _carry_chunk(
+                    F.floor(F.col("__ms") / F.lit(chunk_ms)).cast("long")))
                 .withColumn("__pl", F.lag("__ms").over(ckw))
             )
+
+            def scan(before, _):
+                # chunks hold disjoint increasing ts ranges: the max last ts
+                # of the earlier chunks is the previous chunk's last ts
+                return {
+                    "__prevlast": F.max("__last").over(before),
+                    "__carryB": F.max(F.greatest(
+                        "__bmax", pair_base(F.col("__prevlast"), F.col("__first"))
+                    )).over(before),
+                }
+
             # per-chunk aggregates: first/last ts + max pairwise base among
             # rows with an IN-chunk predecessor (row 1 recomputed below with
             # the carried predecessor)
-            agg = s0.withColumn(
-                "__bloc", F.when(F.col("__pl").isNotNull(),
-                                 pair_base(F.col("__pl"), F.col("__ms")))
-            ).groupBy(*keys, "__ck").agg(
+            joined = _chunk_carry(s0, keys, "__ck", [
                 F.min("__ms").alias("__first"),
                 F.max("__ms").alias("__last"),
-                F.max("__bloc").alias("__bmax"),
-            )
-            cw = Window.partitionBy(*keys).orderBy("__ck")
-            cagg = (
-                agg.withColumn("__prevlast", F.lag("__last").over(cw))
-                .withColumn(
-                    "__contrib",
-                    F.greatest(
-                        "__bmax", pair_base(F.col("__prevlast"), F.col("__first"))
-                    ),
-                )
-            )
-            carry = cagg.select(
-                *keys, "__ck", "__prevlast",
-                F.max("__contrib").over(
-                    cw.rowsBetween(Window.unboundedPreceding, -1)
-                ).alias("__carryB"),
-            )
-            joined = carry_join(
-                s0, carry, [*keys, "__ck"],
-                broadcast=node.params.get("broadcast_carry", True),
-            )
+                F.max(F.when(F.col("__pl").isNotNull(),
+                             pair_base(F.col("__pl"), F.col("__ms")))).alias("__bmax"),
+            ], scan, broadcast=node.params.get("broadcast_carry", True))
             be = pair_base(
                 F.coalesce(F.col("__pl"), F.col("__prevlast")), F.col("__ms")
             )

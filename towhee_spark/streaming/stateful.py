@@ -220,7 +220,9 @@ def stream_sessionize_rows(
     order per key; the (last_us, seq) state persists across batches.
     ``ordered=False``: watermark-sorted buffering first (module docstring) —
     correct on out-of-order sources at the cost of watermark-delay latency."""
-    gap_us = int(gap * 1_000_000)
+    from towhee_spark.temporal import _us  # noqa: PLC0415
+
+    gap_us = _us(gap)
     in_schema = df.schema  # bound locally: closures must not capture df
     out_schema = T.StructType(
         [in_schema[c] for c in out_cols] + [T.StructField(seq_col, T.LongType())]

@@ -88,14 +88,30 @@ def _orderable(dt) -> bool:
     return True
 
 
+def _us(seconds: float) -> int:
+    """Seconds as integer µs, rounded: ``int(1.001 * 1e6)`` would truncate
+    1000999.99… to 1,000,999."""
+    return int(round(seconds * 1_000_000))
+
+
 def _chunk_id(ts: str, dtype, chunk_seconds: float) -> Column:
     """Deterministic value-based time-chunk id: epoch-µs buckets for
     temporal ts columns; for NUMERIC ts columns the raw value is bucketed
     directly (``chunk_seconds`` then shares the column's unit) — plain
-    locf/asof support numeric ts, so the chunked variants must too."""
+    locf/asof support numeric ts, so the chunked variants must too. A NULL
+    ts has a NULL chunk ("no bucket"); the carry family maps it with
+    :func:`_carry_chunk`."""
     if _is_temporal(dtype):
-        return F.floor(epoch_us(ts) / F.lit(int(chunk_seconds * 1_000_000)))
+        return F.floor(epoch_us(ts) / F.lit(_us(chunk_seconds)))
     return F.floor(F.col(ts).cast("double") / F.lit(float(chunk_seconds)))
+
+
+def _carry_chunk(chunk: Column) -> Column:
+    """The chunk column of a cross-chunk carry: a NULL chunk (NULL ts)
+    becomes the lowest bigint, which sorts first ascending and last
+    descending — where NULL ts sorts in the unchunked windows — and joins
+    its carry like any other chunk."""
+    return F.coalesce(chunk, F.lit(-(2 ** 63)))
 
 
 def _time_value(col: Column, dtype) -> Column:
@@ -187,7 +203,8 @@ def _asof_sweep(left: DataFrame, sides: dict, keys: list[str], ts: str,
     chunk = None
     if chunk_seconds is not None:
         chunk = _CHUNK
-        u = u.withColumn(chunk, _chunk_id(ts, u.schema[ts].dataType, chunk_seconds))
+        u = u.withColumn(chunk, _carry_chunk(
+            _chunk_id(ts, u.schema[ts].dataType, chunk_seconds)))
     windows = {sfx: _sweep_window(keys, ts, pay_types, backward,
                                   allow_exact_matches, chunk)
                for sfx, backward in sweeps.items()}
@@ -208,8 +225,7 @@ def _tolerance_gate(pay: Column, ts: str, ts_type, tolerance: float | None,
     ok = rts.isNotNull() & F.col(ts).isNotNull()
     if tolerance is not None:
         tl, tr = _time_value(F.col(ts), ts_type), _time_value(rts, ts_type)
-        # round, not int(): 1.001 * 1e6 is 1000999.99…
-        lim = (F.lit(int(round(tolerance * 1_000_000))) if _is_temporal(ts_type)
+        lim = (F.lit(_us(tolerance)) if _is_temporal(ts_type)
                else F.lit(float(tolerance)))
         ok = ok & (((tl - tr) if backward else (tr - tl)) <= lim)
     return F.when(ok, pay)
@@ -373,7 +389,7 @@ def sessionize(
     # exact integer µs for timestamps (oracle-parity-safe; float epoch-seconds
     # carries 16 significant digits — off-by-ulp at gap boundaries)
     if _is_temporal(df.schema[ts].dataType):
-        tcol, gap_v = epoch_us(ts), F.lit(int(gap * 1_000_000))
+        tcol, gap_v = epoch_us(ts), F.lit(_us(gap))
     else:
         tcol, gap_v = F.col(ts).cast("double"), F.lit(float(gap))
     prev = F.lag(tcol).over(w)
@@ -394,8 +410,8 @@ def carry_join(
     broadcast: bool | None = True,
     how: str = "left",
 ) -> DataFrame:
-    """Join a per-(key, time-chunk) carry frame back onto the row frame —
-    the shared final step of every chunked hot-key operator.
+    """Join a per-key carry frame back onto the row frame. Every chunked
+    hot-key operator reaches it through :func:`_chunk_carry`.
 
     ``broadcast`` picks the strategy for the carry side:
 
@@ -414,6 +430,32 @@ def carry_join(
     elif broadcast is False:
         carry = carry.hint("shuffle_merge")
     return df.join(carry, on=list(on), how=how)
+
+
+def _chunk_carry(rows: DataFrame, keys: Sequence[str], chunk: str,
+                 summary: Sequence[Column], scan, *,
+                 source: DataFrame | None = None,
+                 broadcast: bool | None = True) -> DataFrame:
+    """The one cross-chunk step of every value-chunked operator — the
+    blocked scan's scan of block totals and its fan-out (Blelloch,
+    *Prefix Sums and Their Applications*, 1990).
+
+    Aggregates ``summary`` per (keys, chunk) of ``source`` (default
+    ``rows``) into the tiny chunk frame, adds the ``{name: Column}`` that
+    ``scan(before, after)`` returns in order (a later column may read an
+    earlier one) — ``before`` / ``after`` are the windows over strictly
+    earlier / strictly later chunks of the key, the nearest chunk last —
+    and joins those columns onto ``rows`` with :func:`carry_join`. Build
+    the chunk column with :func:`_carry_chunk` so NULL-ts rows get theirs."""
+    agg = (rows if source is None else source).groupBy(*keys, chunk).agg(*summary)
+    w = Window.partitionBy(*keys)
+    cols = scan(
+        w.orderBy(F.col(chunk).asc()).rowsBetween(Window.unboundedPreceding, -1),
+        w.orderBy(F.col(chunk).desc()).rowsBetween(Window.unboundedPreceding, -1))
+    for name, c in cols.items():
+        agg = agg.withColumn(name, c)
+    return carry_join(rows, agg.select(*keys, chunk, *cols), [*keys, chunk],
+                      broadcast=broadcast)
 
 
 def bfill_chunked(
@@ -459,7 +501,7 @@ def lag_lead_chunked(
     chunk = "__ll_chunk"
     ts_dtype = df.schema[ts].dataType
     extras = [c for c in order_extra if c in df.columns]
-    d = df.withColumn(chunk, _chunk_id(ts, ts_dtype, chunk_seconds))
+    d = df.withColumn(chunk, _carry_chunk(_chunk_id(ts, ts_dtype, chunk_seconds)))
     w_asc = Window.partitionBy(*keys, chunk).orderBy(F.col(ts), *extras)
     w_desc = Window.partitionBy(*keys, chunk).orderBy(
         F.col(ts).desc(), *[F.col(e).desc() for e in extras]
@@ -478,26 +520,22 @@ def lag_lead_chunked(
         # would vanish from the carry chain; positive-start form keeps it
         return F.slice(arr, F.greatest(F.size(arr) - k + 1, F.lit(1)), k)
 
-    agg = d.groupBy(*keys, chunk).agg(
-        *( [last_k(rows_sorted, max_lag).alias("__tail")] if max_lag else [] ),
-        *( [F.slice(rows_sorted, 1, max_lead).alias("__head")] if max_lead else [] ),
-    )
-    cw_asc = Window.partitionBy(*keys).orderBy(chunk)
-    cw_desc = Window.partitionBy(*keys).orderBy(F.col(chunk).desc())
-    sel = [*keys, chunk]
-    if max_lag:
-        # last max_lag rows of ALL previous chunks (short chunks chain)
-        prev_all = F.flatten(F.collect_list("__tail").over(
-            cw_asc.rowsBetween(Window.unboundedPreceding, -1)))
-        sel.append(last_k(prev_all, max_lag).alias("__prev"))
-    if max_lead:
-        nxt_parts = F.collect_list("__head").over(
-            cw_desc.rowsBetween(Window.unboundedPreceding, -1))
-        # collected in DESC chunk order → reverse to ascending, trim to front
-        nxt = F.slice(F.flatten(F.reverse(nxt_parts)), 1, max_lead)
-        sel.append(nxt.alias("__next"))
-    carry = agg.select(*sel)
-    out = carry_join(d, carry, [*keys, chunk], broadcast=broadcast_carry)
+    def scan(before, after):
+        sel = {}
+        if max_lag:
+            # last max_lag rows of ALL previous chunks (short chunks chain)
+            prev_all = F.flatten(F.collect_list("__tail").over(before))
+            sel["__prev"] = last_k(prev_all, max_lag)
+        if max_lead:
+            # collected nearest-last → reverse to ascending, trim to front
+            nxt_parts = F.collect_list("__head").over(after)
+            sel["__next"] = F.slice(F.flatten(F.reverse(nxt_parts)), 1, max_lead)
+        return sel
+
+    out = _chunk_carry(d, keys, chunk, [
+        *([last_k(rows_sorted, max_lag).alias("__tail")] if max_lag else []),
+        *([F.slice(rows_sorted, 1, max_lead).alias("__head")] if max_lead else []),
+    ], scan, broadcast=broadcast_carry)
 
     for c in cols:
         for k in offs:
@@ -525,12 +563,7 @@ def lag_lead_chunked(
                         F.when(idx <= M, fallback)
                     ),
                 )
-    drops = [chunk, "__rn", "__rnr"]
-    if max_lag:
-        drops.append("__prev")
-    if max_lead:
-        drops.append("__next")
-    return out.drop(*drops)
+    return out.drop(chunk, "__rn", "__rnr", "__prev", "__next")
 
 
 def sessionize_chunked(
@@ -559,47 +592,39 @@ def sessionize_chunked(
     keys = _as_list(key)
     dtype = df.schema[ts].dataType
     if _is_temporal(dtype):
-        tcol, gap_v = epoch_us(ts), F.lit(int(gap * 1_000_000))
+        tcol, gap_v = epoch_us(ts), F.lit(_us(gap))
     else:
         tcol, gap_v = F.col(ts).cast("double"), F.lit(float(gap))
     ck = "__sess_ck"
     extras = [c for c in order_extra if c in df.columns]
-    d = df.withColumn("__t", tcol).withColumn(ck, _chunk_id(ts, dtype, chunk_seconds))
+    d = df.withColumn("__t", tcol).withColumn(
+        ck, _carry_chunk(_chunk_id(ts, dtype, chunk_seconds)))
     w_local = Window.partitionBy(*keys, ck).orderBy(F.col(ts), *extras)
+    head = F.row_number().over(w_local) == 1
     prev_local = F.lag("__t").over(w_local)
-    is_new_local = F.when(
-        prev_local.isNotNull() & ((F.col("__t") - prev_local) > gap_v), 1
-    ).otherwise(0)  # head rows resolve against the carried predecessor below
-    d = d.withColumn("__new_loc", is_new_local)
+    # head rows resolve against the carried predecessor below; a non-head
+    # row after a NULL ts (the NULL-ts chunk) opens a session, as in
+    # sessionize
+    d = d.withColumn("__new_loc", F.when(
+        ~head & (prev_local.isNull() | ((F.col("__t") - prev_local) > gap_v)), 1
+    ).otherwise(0))
 
-    agg = d.groupBy(*keys, ck).agg(
+    def scan(before, _):
+        # chunks hold disjoint increasing ts ranges: the max last ts of the
+        # earlier chunks is the previous chunk's last ts
+        prev_last = F.max("__last").over(before)
+        return {
+            "__new_1": F.when(prev_last.isNull()
+                              | ((F.col("__first") - prev_last) > gap_v), 1).otherwise(0),
+            "__base": F.coalesce(F.sum(F.col("__n_loc") + F.col("__new_1")).over(before),
+                                 F.lit(0)),
+        }
+
+    joined = _chunk_carry(d, keys, ck, [
         F.min("__t").alias("__first"),
         F.max("__t").alias("__last"),
         F.sum("__new_loc").alias("__n_loc"),
-    )
-    cw = Window.partitionBy(*keys).orderBy(ck)
-    cagg = (
-        agg.withColumn("__prev_last", F.lag("__last").over(cw))
-        .withColumn(
-            "__new_1",
-            F.when(
-                F.col("__prev_last").isNull()
-                | ((F.col("__first") - F.col("__prev_last")) > gap_v),
-                1,
-            ).otherwise(0),
-        )
-    )
-    carry = cagg.select(
-        *keys, ck, "__new_1",
-        F.coalesce(
-            F.sum(F.col("__n_loc") + F.col("__new_1")).over(
-                cw.rowsBetween(Window.unboundedPreceding, -1)
-            ),
-            F.lit(0),
-        ).alias("__base"),
-    )
-    joined = carry_join(d, carry, [*keys, ck], broadcast=broadcast_carry)
-    head = F.row_number().over(w_local) == 1
+    ], scan, broadcast=broadcast_carry)
     eff_new = F.when(head, F.col("__new_1")).otherwise(F.col("__new_loc"))
     run = F.sum(eff_new).over(
         w_local.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -628,25 +653,17 @@ def chunked_row_number(
     serializes a mega-key onto one task exactly like LOCF/time_window did):
     local row_number per (key, value-chunk of ``ts``) + an exclusive
     prefix-sum of per-chunk counts over the tiny chunk frame, carried back
-    with :func:`carry_join`. Ties always share a chunk (floor bucketing),
+    with :func:`_chunk_carry`. Ties always share a chunk (floor bucketing),
     so tie handling matches the global window's. ``chunk_span`` is seconds
     for temporal ``ts``, the column's own unit for numeric ``ts``."""
-    ck = _chunk_id(ts, df.schema[ts].dataType, chunk_span)
-    df2 = df.withColumn("__crn_ck", ck)
+    df2 = df.withColumn(
+        "__crn_ck", _carry_chunk(_chunk_id(ts, df.schema[ts].dataType, chunk_span)))
     w_local = Window.partitionBy(*keys, "__crn_ck").orderBy(F.col(ts), *extra_order)
-    counts = df2.groupBy(*keys, "__crn_ck").agg(F.count(F.lit(1)).alias("__cnt"))
-    w_off = (
-        Window.partitionBy(*keys).orderBy("__crn_ck")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offs = counts.select(
-        *keys, "__crn_ck",
-        F.coalesce(F.sum("__cnt").over(w_off), F.lit(0)).alias("__off"),
-    )
-    joined = carry_join(
-        df2.withColumn("__lrn", F.row_number().over(w_local)),
-        offs, [*keys, "__crn_ck"], broadcast=broadcast_carry,
-    )
+    joined = _chunk_carry(
+        df2.withColumn("__lrn", F.row_number().over(w_local)), keys, "__crn_ck",
+        [F.count(F.lit(1)).alias("__cnt")],
+        lambda before, _: {"__off": F.coalesce(F.sum("__cnt").over(before), F.lit(0))},
+        source=df2, broadcast=broadcast_carry)
     return (
         joined.withColumn(out, (F.col("__off") + F.col("__lrn") - 1).cast("long"))
         .drop("__crn_ck", "__lrn", "__off")
@@ -692,7 +709,7 @@ def _fill_chunked(df, cols, key, ts, chunk_seconds, suffix, order_extra,
     keys = _as_list(key)
     chunk = "__locf_chunk" if forward else "__bf_chunk"
     ts_dtype = df.schema[ts].dataType
-    df2 = df.withColumn(chunk, _chunk_id(ts, ts_dtype, chunk_seconds))
+    df2 = df.withColumn(chunk, _carry_chunk(_chunk_id(ts, ts_dtype, chunk_seconds)))
 
     def along(c):  # time order (forward) or its exact reverse (backward)
         return F.col(c) if forward else F.col(c).desc()
@@ -718,23 +735,14 @@ def _fill_chunked(df, cols, key, ts, chunk_seconds, suffix, order_extra,
         st = F.when(F.col(c).isNotNull(), F.struct(*ordk, F.col(c).alias("v")))
         return (F.max(st) if forward else F.min(st))["v"].alias(c + "__edge")
 
-    chunk_edges = df2.groupBy(*keys, chunk).agg(*[edge_nonnull(c) for c in cols])
     # carry INTO each chunk = fill of edges over STRICTLY EARLIER chunks in
     # fill order
-    w_carry = (
-        Window.partitionBy(*keys)
-        .orderBy(along(chunk))
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = chunk_edges.select(
-        *keys,
-        chunk,
-        *[
-            F.last(c + "__edge", ignorenulls=True).over(w_carry).alias(c + "__carry")
-            for c in cols
-        ],
-    )
-    out = carry_join(filled, carry, keys + [chunk], broadcast=broadcast_carry)
+    out = _chunk_carry(
+        filled, keys, chunk, [edge_nonnull(c) for c in cols],
+        lambda before, after: {
+            c + "__carry": F.last(c + "__edge", ignorenulls=True).over(
+                before if forward else after) for c in cols},
+        source=df2, broadcast=broadcast_carry)
     for c in cols:
         out = out.withColumn(
             c + suffix, F.coalesce(F.col(c + suffix), F.col(c + "__carry"))
@@ -790,22 +798,15 @@ def asof_join_chunked(
     # choice the sweep's tie rule makes among duplicate (key, ts) rows.
     rext = F.when(F.col(_SRC) == 0, F.struct(F.col(ts).alias("o"), F.col(_PAY).alias("p")))
     ext = (F.max(rext) if backward else F.min(rext))["p"].alias("__ext")
-    chunk_ext = u.groupBy(*keys, _CHUNK).agg(ext)
-    w_carry = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col(_CHUNK).asc() if backward else F.col(_CHUNK).desc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = chunk_ext.select(
-        *keys, _CHUNK,
-        F.last("__ext", ignorenulls=True).over(w_carry).alias("__carry"),
-    )
-
+    res = _chunk_carry(
+        swept.filter(F.col(_SRC) == 1), keys, _CHUNK, [ext],
+        lambda before, after: {"__carry": F.last("__ext", ignorenulls=True).over(
+            before if backward else after)},
+        source=u, broadcast=broadcast_carry)
     pay = _tolerance_gate(F.coalesce(F.col(_PAY), F.col("__carry")), ts,
                           u.schema[ts].dataType, tolerance, backward)
-    res = carry_join(swept.filter(F.col(_SRC) == 1), carry, keys + [_CHUNK],
-                     broadcast=broadcast_carry).withColumn(_PAY, pay)
-    return res.select(*left.columns, *[F.col(_PAY)[o].alias(o) for _, o in pairs])
+    return res.withColumn(_PAY, pay).select(
+        *left.columns, *[F.col(_PAY)[o].alias(o) for _, o in pairs])
 
 
 # --------------------------------------------------------------------------
@@ -1095,9 +1096,9 @@ def future_agg(
         sp2 = spine.withColumn("__fa_t", -epoch_us(s_ts))
         # horizon and chunk span move to the negated-µs numeric domain
         out = _range_agg_prefix(
-            sp2, ev2, keys, "__fa_t", "__fa_t", h * 1_000_000.0, specs,
+            sp2, ev2, keys, "__fa_t", "__fa_t", _us(h), specs,
             include_current, _as_list(spine_id), broadcast_result,
-            None if chunk_seconds is None else chunk_seconds * 1_000_000.0,
+            None if chunk_seconds is None else _us(chunk_seconds),
             broadcast_carry)
         return out.drop("__fa_t")
     raise ValueError(f"future_agg: unknown impl {impl!r}")
@@ -1181,7 +1182,7 @@ def range_quantile(
         *sp_cols, F.lit(None).cast(v_type).alias("__rq_v"))
     u = ev_wide.unionByName(sp_wide)
     hi = 0 if include_current else -1
-    w_us = int(round(w * 1_000_000))
+    w_us = _us(w)
     bounds = (-w_us, hi) if direction == "backward" else (-hi, w_us)
     frame = (
         Window.partitionBy(*keys).orderBy("__rq_t").rangeBetween(*bounds))
@@ -1237,7 +1238,7 @@ def _range_agg_window(spine, events, keys, ts, s_ts, w, specs,
     hi = 0 if include_current else -1
     out_cols = []
     for suffix, wsec in wins:
-        w_us = int(round(wsec * 1_000_000))
+        w_us = _us(wsec)
         if direction == "backward":
             bounds = (-w_us, hi)  # [t−w, t) / [t−w, t]
         else:
@@ -1262,7 +1263,7 @@ def _range_agg_prefix(spine, events, keys, ts, s_ts, w, specs,
                       chunk_seconds=None, broadcast_carry=True):
     e_dtype = events.schema[ts].dataType
     is_time = _is_temporal(e_dtype)
-    w_off = F.lit(int(round(w * 1_000_000))) if is_time else F.lit(float(w))
+    w_off = F.lit(_us(w)) if is_time else F.lit(float(w))
 
     # per-event contributions: for every agg a value sum and a non-null
     # count (the count recovers SQL NULL-on-empty and builds avg)
@@ -1332,9 +1333,8 @@ def _range_agg_prefix(spine, events, keys, ts, s_ts, w, specs,
         # exists even when it holds no events) — chunked_row_number's
         # shape with K summed columns. Probe rows contribute NULL to the
         # totals, so the carry is events-only by construction.
-        step = (F.lit(int(round(chunk_seconds * 1_000_000))) if is_time
-                else F.lit(float(chunk_seconds)))
-        uc = u.withColumn("__ra_ck", F.floor(F.col("__ra_t") / step))
+        step = F.lit(_us(chunk_seconds)) if is_time else F.lit(float(chunk_seconds))
+        uc = u.withColumn("__ra_ck", _carry_chunk(F.floor(F.col("__ra_t") / step)))
         w_local = (
             Window.partitionBy(*keys, "__ra_ck")
             .orderBy("__ra_t", "__ra_tie")
@@ -1342,18 +1342,13 @@ def _range_agg_prefix(spine, events, keys, ts, s_ts, w, specs,
         local = uc.select(
             *keys, "__ra_ck", "__ra_kind", *sid_extra,
             *[F.sum(c).over(w_local).alias(f"__loc{c}") for c in pairs])
-        totals = uc.groupBy(*keys, "__ra_ck").agg(
-            *[F.sum(c).alias(f"__tot{c}") for c in pairs])
-        w_carry = (
-            Window.partitionBy(*keys).orderBy("__ra_ck")
-            .rowsBetween(Window.unboundedPreceding, -1))
-        carry = totals.select(
-            *keys, "__ra_ck",
-            *[F.coalesce(F.sum(f"__tot{c}").over(w_carry), F.lit(0))
-              .alias(f"__car{c}") for c in pairs])
-        swept = carry_join(
-            local.where(F.col("__ra_kind").isNotNull()),
-            carry, [*keys, "__ra_ck"], broadcast=broadcast_carry)
+        swept = _chunk_carry(
+            local.where(F.col("__ra_kind").isNotNull()), keys, "__ra_ck",
+            [F.sum(c).alias(f"__tot{c}") for c in pairs],
+            lambda before, _: {
+                f"__car{c}": F.coalesce(F.sum(f"__tot{c}").over(before), F.lit(0))
+                for c in pairs},
+            source=uc, broadcast=broadcast_carry)
         swept = swept.select(
             *keys, "__ra_kind", *sid_extra,
             *[(F.coalesce(F.col(f"__loc{c}"), F.lit(0))
@@ -1771,7 +1766,7 @@ def resample_grid(
             f"resample_grid: ts column {ts!r} must be a timestamp "
             f"(got {dtype.simpleString()}) — numeric time axes need a unit "
             f"convention; convert to timestamp upstream")
-    every_us = int(round(every * 1_000_000))
+    every_us = _us(every)
 
     # duplicate-(key, ts) observations resolve per column to MAX (the
     # asof_join backward rule) and the series becomes unique on (key, us)
@@ -1986,7 +1981,7 @@ def time_folds(
     if embargo_seconds < 0:
         raise ValueError("time_folds: embargo_seconds must be >= 0")
     t = _int_time(df, ts, "time_folds")
-    emb = int(round(embargo_seconds * 1_000_000))
+    emb = _us(embargo_seconds)
     bounds = df.agg(
         F.min(t).alias("__mn"), F.max(t).alias("__mx"),
     )
@@ -2219,7 +2214,7 @@ def range_zscore(
     hi = 0 if include_current else -1
     frame = (
         Window.partitionBy(*keys).orderBy("__zs_t")
-        .rangeBetween(-int(round(window_seconds * 1_000_000)), hi))
+        .rangeBetween(-_us(window_seconds), hi))
     n = F.count("__zs_xf").over(frame)
     s1 = F.sum(F.col("__zs_xf").cast(dec)).over(frame)
     s2 = F.sum(F.col("__zs_xf").cast(dec) * F.col("__zs_xf")).over(frame)
@@ -2287,7 +2282,7 @@ def expanding_agg(
         # NULL-ts rows share a window peer group: null their contributions
         # so they report an EMPTY history (count 0 / NULL aggregates) and
         # never enter any baseline — identical on the chunked path, whose
-        # NULL chunk then carries nothing
+        # NULL-ts chunk then carries nothing
         return F.when(F.col("__xa_t").isNotNull(), base)
 
     if chunk_seconds is None:
@@ -2305,53 +2300,32 @@ def expanding_agg(
             d = d.withColumn(name, c)
         return d.drop("__xa_t")
 
-    ck = _chunk_id(ts, df.schema[ts].dataType, chunk_seconds)
-    d = d.withColumn("__xa_ck", ck)
+    d = d.withColumn("__xa_ck", _carry_chunk(
+        _chunk_id(ts, df.schema[ts].dataType, chunk_seconds)))
     w_local = (
         Window.partitionBy(*keys, "__xa_ck").orderBy("__xa_t")
         .rangeBetween(Window.unboundedPreceding, hi))
-    w_carry = (
-        Window.partitionBy(*keys).orderBy("__xa_ck")
-        .rowsBetween(Window.unboundedPreceding, -1))
     # local running values + per-chunk totals per distinct (fn, col) need
-    tot_aggs, car_cols, loc_cols = [], [], []
     need = {}
     for name, fn, col in specs:
         for f2 in ({"count", "sum"} if fn == "avg" else {fn}):
             need.setdefault((f2, col), f"__xa_{f2}_{col or '_'}")
     for (fn, col), tag in need.items():
-        src = _src(col)
-        if fn == "count":
-            loc = F.count(src).over(w_local)
-            tot = F.count(src)
-            car = F.coalesce(F.sum(F.col(f"{tag}_tot")).over(w_carry),
-                             F.lit(0))
-        elif fn == "sum":
-            loc = F.sum(src).over(w_local)
-            tot = F.sum(src)
-            car = F.sum(F.col(f"{tag}_tot")).over(w_carry)
-        elif fn == "min":
-            loc = F.min(src).over(w_local)
-            tot = F.min(src)
-            car = F.min(F.col(f"{tag}_tot")).over(w_carry)
-        else:  # max
-            loc = F.max(src).over(w_local)
-            tot = F.max(src)
-            car = F.max(F.col(f"{tag}_tot")).over(w_carry)
-        d = d.withColumn(f"{tag}_loc", loc)
-        tot_aggs.append(tot.alias(f"{tag}_tot"))
-        car_cols.append(car.alias(f"{tag}_car"))
-        loc_cols.append(tag)
-    totals = d.groupBy(*keys, "__xa_ck").agg(*tot_aggs)
-    carry = totals.select(*keys, "__xa_ck", *car_cols)
-    j = carry_join(d, carry, [*keys, "__xa_ck"], broadcast=broadcast_carry)
+        d = d.withColumn(f"{tag}_loc", getattr(F, fn)(_src(col)).over(w_local))
+
+    # per-chunk totals carry by + (count, sum) or least/greatest (min, max)
+    j = _chunk_carry(
+        d, keys, "__xa_ck",
+        [getattr(F, fn)(_src(col)).alias(f"{tag}_tot") for (fn, col), tag in need.items()],
+        lambda before, _: {
+            f"{tag}_car": (F.sum if fn == "count" else getattr(F, fn))(f"{tag}_tot")
+            .over(before) for (fn, col), tag in need.items()},
+        broadcast=broadcast_carry)
 
     def _combined(fn, col):
         tag = need[(fn, col)]
         lc, cc = F.col(f"{tag}_loc"), F.col(f"{tag}_car")
         if fn == "count":
-            # NULL-ts rows live in a NULL chunk, which a join on the chunk
-            # key can never match — their carry is NULL, not 0
             return (lc + F.coalesce(cc, F.lit(0))).cast("long")
         if fn == "sum":
             return F.when(
@@ -2367,9 +2341,8 @@ def expanding_agg(
             j = j.withColumn(name, F.when(n > 0, _combined("sum", col) / n))
         else:
             j = j.withColumn(name, _combined(fn, col))
-    drop = ["__xa_t", "__xa_ck"]
-    drop += [f"{t}_loc" for t in loc_cols] + [f"{t}_car" for t in loc_cols]
-    return j.drop(*drop)
+    return j.drop("__xa_t", "__xa_ck",
+                  *[f"{t}_{x}" for t in need.values() for x in ("loc", "car")])
 
 
 def session_features(
